@@ -15,14 +15,16 @@ Kernel ↔ reference parity:
                         tested hermetically, http(s) same code path;
                         main.py:161-204)
 - U2 band stack       → stack_bands applyInPandas (main.py:206-232)
-- U3 polygon clip     → clip_to_polygon (main.py:241-243; rasterio.mask
-                        crop+nodata semantics, ray-casting point test)
+- U3 polygon clip     → clip_to_polygon row-local mapInPandas
+                        (main.py:241-243; rasterio.mask crop+nodata
+                        semantics, ray-casting point test)
 - U4 channel means    → channel_means (main.py:247-251:
                         np.mean(channel[channel != 0]))
 - U5 white fraction   → white_fraction (main.py:272-281: transpose,
                         oob = max(2)==0, white = min(2)>=153 &
                         max(2)-min(2)<=25, ratio vs in-bounds count)
-- U6 thumbnail        → thumbnail (main.py:288-308: w//7, h//7;
+- U6 thumbnail        → thumbnail row-local mapInPandas
+                        (main.py:288-308: w//7, h//7;
                         Keys a=-0.5 bicubic convolution resample in
                         pure numpy + stdlib-zlib PNG; only PIL's
                         8-bit fixed-point weight quantization may
@@ -257,7 +259,11 @@ def clip_to_polygon(stacked: DataFrame, polygon_of) -> DataFrame:
     ring SET ``[[(x, y), ...], ...]`` for multi-polygon bodies, masked
     with union semantics (``_union_mask`` — overlapping rings keep
     interior pixels once, matching the reference's union-then-mask
-    order)."""
+    order).
+
+    Row-local: each row is one entity's raster, so the kernel runs per
+    Arrow batch through ``mapInPandas`` — no shuffle of the raster
+    bytes."""
 
     def _clip(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -285,7 +291,7 @@ def clip_to_polygon(stacked: DataFrame, polygon_of) -> DataFrame:
             rows, columns=["entity_id", "width", "height", "bands", "data"]
         )
 
-    return stacked.groupBy("entity_id").applyInPandas(_clip, CLIP_SCHEMA)
+    return stacked.mapInPandas(lambda pdfs: map(_clip, pdfs), CLIP_SCHEMA)
 
 
 # ---------------------------------------------------------------- U6
@@ -447,7 +453,8 @@ def thumbnail(stacked: DataFrame) -> DataFrame:
     (main.py:303-304 ``Image.BICUBIC`` — here the same Keys a=-0.5
     convolution kernel in pure numpy, ``bicubic_resize``), and a real
     PNG payload (main.py:303-308) encoded with stdlib zlib
-    (``png_encode``)."""
+    (``png_encode``). Row-local like ``clip_to_polygon``: one
+    ``mapInPandas`` pass, no shuffle."""
 
     def _thumb(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = []
@@ -501,7 +508,7 @@ def thumbnail(stacked: DataFrame) -> DataFrame:
             ],
         )
 
-    return stacked.groupBy("entity_id").applyInPandas(_thumb, THUMB_SCHEMA)
+    return stacked.mapInPandas(lambda pdfs: map(_thumb, pdfs), THUMB_SCHEMA)
 
 
 # ---------------------------------------------------------------- U1

@@ -337,14 +337,6 @@ def simhash_fold_expr(hashes):
     )
 
 
-def simhash60(toks):
-    """60-bit SimHash over distinct tokens — the full spec form:
-    JVM-side md5 per distinct token, then ``simhash_fold_expr``."""
-    return simhash_fold_expr(
-        F.transform(F.array_distinct(toks), lambda t: tok_hash60(t))
-    )
-
-
 def _simhash_frame(hs: DataFrame) -> DataFrame:
     """(doc_id, hashes array<long>) → (doc_id, simhash long): the
     60-bit fingerprint fold as numpy per Arrow batch.

@@ -365,16 +365,3 @@ def geo_polygon_union_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_polygons"),
     )
     return rasterized_union_cells(body)
-
-
-def exact_union_boundary(groups):
-    """The exact union *polygon boundary* (main.py:386-388) as vector
-    geometry — NATIVE since r10: a from-scratch planar clipping kernel
-    (slab decomposition on exact rationals, no shapely) lives in
-    ``operators/clipping.py``; this name is kept as the discoverable
-    entry point next to the union-measure operators above. See
-    geo_polygon_union_boundary / geo_union_boundary_hierarchical for
-    the registered Spark forms."""
-    from lake_satellite_image_etl_spark.operators.clipping import union_boundary
-
-    return union_boundary(groups)

@@ -197,12 +197,16 @@ def idempotent_append(
 
     ``existing`` only needs its PK columns — at 100 TB read just the PK
     columns of the target (column pruning) or a bloom-filter index.
+    It is not de-duplicated: an anti-join's result does not depend on
+    duplicates in its right side, so a ``distinct`` there would only
+    add an aggregation over the target's keys.
+
     Run-twice property: appending the result, then calling this again
     with the same ``new_rows``, yields an empty frame (tested in
     tests/test_incremental.py).
     """
     deduped = new_rows.dropDuplicates(pk)
-    return deduped.join(existing.select(*pk).distinct(), pk, "left_anti")
+    return deduped.join(existing.select(*pk), pk, "left_anti")
 
 
 @query(

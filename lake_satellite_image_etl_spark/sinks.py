@@ -4,7 +4,9 @@ binary artifact store.
 The reference commits one row per image inside the fan-out loop
 (main.py:453-457, ON CONFLICT DO NOTHING) and uploads three artifacts
 per image from a 5-thread pool (main.py:311-325). Distributed form:
-ONE batched, restartable append of the PK-anti-joined delta (K1), and
+ONE batched, restartable append of the PK-anti-joined delta (K1) —
+a single write action, its row count read from an ``Observation`` on
+that write, and no files left behind when it appends 0 rows — and
 executor-side artifact writes via ``foreachPartition`` (K2) — the
 thread pools disappear into partition parallelism.
 """
@@ -12,9 +14,11 @@ thread pools disappear into partition parallelism.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from lake_satellite_image_etl_spark.operators.incremental import idempotent_append
 
@@ -25,24 +29,55 @@ def write_idempotent_append(
     """K1: append only PK-new rows to a parquet target — the batch
     equivalent of INSERT … ON CONFLICT DO NOTHING (main.py:453-457).
 
-    Reads back only the PK columns of the target (column pruning keeps
-    this cheap at any target size; at 100 TB swap the distinct-PK scan
-    for a partition-pruned read or a bloom index). Returns the number
-    of rows appended — 0 on a re-run with the same input, which is the
-    idempotency contract (tests/test_incremental.py run-twice test).
+    ONE action: the PK-anti-joined delta is written directly, and the
+    number of rows it appends is read from an ``Observation`` attached
+    right before the write, so it is counted in the write's own result
+    stage (once, even if a task is retried). The target's PK columns
+    are read with ``new_rows``' PK schema, which skips the
+    schema-inference job; a target whose PK types differ fails the
+    read, loudly. Column pruning keeps the key scan cheap at any
+    target size (at 100 TB swap it for a partition-pruned read or a
+    bloom index).
+
+    Writing an empty frame still leaves an empty part file and its
+    checksum. When the delta is empty, every file the write added is
+    removed (the whole target, if it did not exist before), so a
+    re-run leaves the target's listing as it found it. The cleanup
+    diffs the listing, so it assumes no concurrent writer to the same
+    target — as the anti-join already does.
+
+    Returns the number of rows appended — 0 on a re-run with the same
+    input, which is the idempotency contract (tests/test_incremental.py
+    run-twice test).
     """
-    if os.path.exists(target_path):
-        existing = spark.read.parquet(target_path).select(*pk)
+    existed = os.path.exists(target_path)
+    if existed:
+        before = _listing(target_path)
+        existing = spark.read.schema(new_rows.select(*pk).schema).parquet(target_path)
     else:
         existing = new_rows.select(*pk).limit(0)
     delta = idempotent_append(new_rows, existing, pk)
-    # cache: the count and the write must see the same delta exactly once
-    delta = delta.cache()
-    n = delta.count()
-    if n:
-        delta.write.mode("append").parquet(target_path)
-    delta.unpersist()
+    appended = Observation()
+    delta.observe(appended, F.count(F.lit(1)).alias("n")).write.mode(
+        "append"
+    ).parquet(target_path)
+    n = appended.get["n"]
+    if n == 0:
+        if not existed:
+            shutil.rmtree(target_path)
+        else:
+            for rel in _listing(target_path) - before:
+                os.remove(os.path.join(target_path, rel))
     return n
+
+
+def _listing(path: str) -> set[str]:
+    """Every file under ``path`` (hidden ones included), relative."""
+    return {
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _, files in os.walk(path)
+        for f in files
+    }
 
 
 def write_binary_artifacts(df: DataFrame, out_dir: str, key_col: str, data_col: str) -> int:

@@ -50,8 +50,6 @@ CONSTRUCTION_JOB_ALLOWLIST: dict[str, str] = {
     "the output would move the entire measured computation out of "
     "the timed path, unlike the IVF memo which moves only index "
     "build (r13 audit: memo pattern does not apply)",
-    "pipeline_corpus_dedup": "training: composes corpus_bpe_learn's "
-    "merge loop (same reasoning — the training IS the query)",
     # -- iterative: loops whose control flow needs a materialized
     #    frontier (convergence checks) -- (r16, per the measured
     #    loop-form results in OPTIMIZATION_r16.md §10: ONLY
@@ -74,6 +72,8 @@ CONSTRUCTION_JOB_ALLOWLIST: dict[str, str] = {
     "label-propagation rounds",
     "sample_cluster_safe_split": "iterative: composes "
     "dedup_cluster_assign's label-propagation rounds",
+    "pipeline_corpus_dedup": "iterative: label_propagate_components "
+    "rounds over the survivors' MinHash pair edges",
     # -- mechanics: streaming runners / external round-trips --
     "stream_cdc_batch": "mechanics: AvailableNow micro-batch executes",
     "stream_dedup_batch": "mechanics: AvailableNow micro-batch executes",

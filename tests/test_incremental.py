@@ -50,6 +50,128 @@ def test_idempotent_append_run_twice(spark):
     assert spark.read.parquet(target).count() == n_first
 
 
+def _listing(path):
+    return sorted(
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def _max_job_id(spark):
+    """Highest job id in Spark's status store, after the listener bus
+    has delivered every pending event (as perfbench/tracing.py reads
+    it)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        sc.statusStore().jobsList(None)
+    )
+    return max((j.jobId() for j in jobs), default=-1)
+
+
+def _keyed_rows(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).cast("string").alias("tag"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+
+
+def test_idempotent_append_zero_rows_leaves_target_untouched(spark):
+    """A re-run appends 0 rows and must not leave the empty part file
+    (or its checksum) that writing an empty frame produces."""
+    from lake_satellite_image_etl_spark.sinks import write_idempotent_append
+
+    target = os.path.join(SCRATCH, "zero.parquet")
+    pk = ["k", "tag"]
+    assert write_idempotent_append(spark, _keyed_rows(spark, 0, 30), target, pk) == 30
+    before = _listing(target)
+    assert any(f.startswith(".") for f in before)  # checksums are listed
+    assert write_idempotent_append(spark, _keyed_rows(spark, 10, 30), target, pk) == 0
+    assert write_idempotent_append(spark, _keyed_rows(spark, 0, 0), target, pk) == 0
+    assert _listing(target) == before
+    # an empty first write leaves no target behind at all
+    fresh = os.path.join(SCRATCH, "fresh.parquet")
+    assert write_idempotent_append(spark, _keyed_rows(spark, 0, 0), fresh, pk) == 0
+    assert not os.path.exists(fresh)
+
+
+def test_idempotent_append_count_matches_reread(spark):
+    from lake_satellite_image_etl_spark.sinks import write_idempotent_append
+
+    target = os.path.join(SCRATCH, "count.parquet")
+    pk = ["k", "tag"]
+    n1 = write_idempotent_append(spark, _keyed_rows(spark, 0, 40), target, pk)
+    assert n1 == spark.read.parquet(target).count() == 40
+    # overlapping offer: only the 17 new keys land, and the returned
+    # count is what a re-read finds added
+    n2 = write_idempotent_append(spark, _keyed_rows(spark, 23, 57), target, pk)
+    assert n2 == spark.read.parquet(target).count() - n1 == 17
+
+
+def test_idempotent_append_pk_type_mismatch_fails(spark):
+    """The target's keys are read with the new rows' PK types: a
+    target whose key column has another type fails the read instead
+    of being silently cast."""
+    from lake_satellite_image_etl_spark.sinks import write_idempotent_append
+
+    target = os.path.join(SCRATCH, "typed.parquet")
+    assert write_idempotent_append(spark, _keyed_rows(spark, 0, 5), target, ["k"]) == 5
+    before = _listing(target)
+    as_string = _keyed_rows(spark, 0, 8).withColumn("k", F.col("k").cast("string"))
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        write_idempotent_append(spark, as_string, target, ["k"])
+    assert _listing(target) == before
+
+
+def test_idempotent_append_job_count(spark):
+    """One append of a small frame runs the key scan, the anti-join
+    and the write as ONE action: at most 3 Spark jobs (the shuffle
+    stages AQE submits, then the write). A cache + count pass ahead of
+    the write would take it to 6 or more."""
+    from lake_satellite_image_etl_spark.sinks import write_idempotent_append
+
+    target = os.path.join(SCRATCH, "jobs.parquet")
+    pk = ["k", "tag"]
+    write_idempotent_append(spark, _keyed_rows(spark, 0, 200), target, pk)
+    for lo, hi, expect in [(190, 210, 10), (190, 210, 0)]:
+        rows = _keyed_rows(spark, lo, hi)
+        floor = _max_job_id(spark)
+        assert write_idempotent_append(spark, rows, target, pk) == expect
+        assert _max_job_id(spark) - floor <= 3
+
+
+def test_idempotent_append_ignores_duplicate_and_null_existing_keys(spark):
+    """The anti-join's right side is not de-duplicated: duplicate and
+    NULL keys in ``existing`` give the same delta as its distinct,
+    non-NULL keys."""
+    from lake_satellite_image_etl_spark.operators.incremental import (
+        idempotent_append,
+    )
+
+    schema = "k long, tag string, v double"
+    new = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "a", 2.0), (2, "a", 2.5), (3, None, 3.0),
+         (4, "b", 4.0), (5, "b", 5.0), (None, "c", 6.0)],
+        schema,
+    )
+    clean = spark.createDataFrame([(2, "a"), (4, "b")], "k long, tag string")
+    messy = spark.createDataFrame(
+        [(2, "a"), (2, "a"), (4, "b"), (4, "b"), (4, "b"), (3, None),
+         (None, "c"), (None, None), (5, None)],
+        "k long, tag string",
+    )
+    pk = ["k", "tag"]
+
+    def keys(df):
+        return sorted((tuple(r) for r in df.select(*pk).collect()), key=repr)
+
+    expect = sorted([(1, "a"), (3, None), (5, "b"), (None, "c")], key=repr)
+    assert keys(idempotent_append(new, clean, pk)) == expect
+    assert keys(idempotent_append(new, messy, pk)) == expect
+
+
 def test_pipeline_records_idempotent_sink(spark):
     """The reference's end state: per-image records upserted with
     ON CONFLICT DO NOTHING on PK (waterbody_id, captured_ts)

@@ -417,3 +417,45 @@ def test_fetch_remote_bands_file_urls_end_to_end(spark, tmp_path):
     ).collect()[0]
     assert bytes(one["content"]) == b"\x01\x02\x03notazip"
     assert one["n_bytes"] == 10
+
+
+def test_row_local_clip_and_thumbnail_match_single_row_runs(spark):
+    """clip_to_polygon and thumbnail run per Arrow batch with no
+    shuffle: on a multi-entity frame, round-robin repartitioned and cut
+    into 2-row Arrow batches, every entity's output equals what the
+    kernel returns for that entity's row alone."""
+    dims = {0: (30, 24), 1: (16, 16), 2: (22, 29), 3: (30, 24), 4: (9, 12), 5: (40, 21)}
+    rows = [
+        (eid, w, h, 3, np.stack([rk.synth_band_array(eid, b, w, h) for b in range(3)]).tobytes())
+        for eid, (w, h) in dims.items()
+    ]
+    polys = {
+        eid: [(1.0, 1.0), (w - 2.0, 2.5), (w / 2.0, h - 1.5)] for eid, (w, h) in dims.items()
+    }
+    polys[3] = [polys[3], [(0.0, 0.0), (6.0, 0.0), (6.0, 6.0), (0.0, 6.0)]]  # ring set
+
+    def frame(rs):
+        cols = ["entity_id", "width", "height", "bands", "data"]
+        return spark.createDataFrame(pd.DataFrame(rs, columns=cols), rk.STACKED_SCHEMA)
+
+    def run(df):
+        clip = {r["entity_id"]: tuple(r) for r in rk.clip_to_polygon(df, polys.__getitem__).collect()}
+        thumb = {r["entity_id"]: tuple(r) for r in rk.thumbnail(df).collect()}
+        return clip, thumb
+
+    full = frame(rows)
+    for out in (rk.clip_to_polygon(full, polys.__getitem__), rk.thumbnail(full)):
+        assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        clip, thumb = run(full.repartition(3))
+    finally:
+        spark.conf.set(key, old)
+    assert set(clip) == set(thumb) == set(dims)
+    for row in rows:
+        one_clip, one_thumb = run(frame([row]))
+        assert one_clip == {row[0]: clip[row[0]]}
+        assert one_thumb == {row[0]: thumb[row[0]]}
