@@ -21,8 +21,11 @@ has a full DuckDB oracle.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 from lake_satellite_image_etl_spark.functions.text import (
     _SQL_TOKS,
@@ -898,6 +901,65 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (components are quasi-cliques; diameter grows ~log of chain length).
 CLUSTER_MAX_ROUNDS = 50
 
+#: edge rows up to which a connected-components call finishes on the
+#: driver (``driver_components``) instead of running distributed
+#: rounds: about where the driver path costs one distributed round.
+#: Measured on random graphs (2^k symmetrized edge rows), Spark
+#: local[2] on a 4-core Xeon host, the driver path (bounded Arrow
+#: collect, union-find, result written to a noop sink) against one
+#: label-propagation round: 2^16 rows 0.32 s vs 0.25 s, 2^17 0.51 vs
+#: 0.49, 2^18 0.82 vs 0.92, 2^19 3.2 vs 0.82, 2^20 4.6 vs 1.7. The
+#: loop also pays an edge checkpoint and at least two rounds. 2^17
+#: keeps a factor of two below the 2^18-2^19 crossover.
+DRIVER_COMPONENTS_MAX_EDGES = 1 << 17
+
+
+def driver_components(pairs: DataFrame, schema: StructType) -> DataFrame | None:
+    """Connected components of a small graph, finished on the driver.
+
+    Reads at most ``DRIVER_COMPONENTS_MAX_EDGES + 1`` rows of the
+    two-column ``pairs`` frame in one Spark job (an Arrow collect under
+    a limit). Returns None when there are more rows than that, or a
+    null id: the caller then runs its distributed loop. Otherwise
+    union-find with union-by-smaller-id makes every root its
+    component's minimum id, and the result, one (node, label) row per
+    endpoint, is returned with ``schema`` as a local relation. It is
+    built from an Arrow table, not from Python rows, so it plans as a
+    ``LocalTableScan`` and no Python worker reads it."""
+    table = pairs.limit(DRIVER_COMPONENTS_MAX_EDGES + 1).toArrow()
+    if table.num_rows > DRIVER_COMPONENTS_MAX_EDGES or any(
+        c.null_count for c in table.columns
+    ):
+        return None
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(table.column(0).to_pylist(), table.column(1).to_pylist()):
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    nodes = list(parent)
+    arrow_type = to_arrow_type(schema["node"].dataType)
+    return pairs.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(nodes, arrow_type),
+                "label": pa.array([find(n) for n in nodes], arrow_type),
+            }
+        ),
+        schema,
+    )
+
 
 def label_propagate_components(edges: DataFrame) -> DataFrame:
     """Connected components by min-label propagation, iterated TO
@@ -908,7 +970,16 @@ def label_propagate_components(edges: DataFrame) -> DataFrame:
     contain both directions of every undirected edge. Returns
     (node, label) with label = the component's minimum node id.
 
-    Scale shape (the standard large-graph CC pattern):
+    Two paths:
+    - a graph of at most ``DRIVER_COMPONENTS_MAX_EDGES`` edge rows
+      (2^17; sized by measurement beside the constant) is read in one
+      bounded Arrow collect and finished on the driver by union-find
+      (``driver_components``) — one Spark job, and the result is a
+      local relation;
+    - a larger graph runs the distributed loop below, the only path
+      that handles a graph too large for the driver.
+
+    Scale shape of the loop (the standard large-graph CC pattern):
     - each round is ONE shuffle: (node, label) joined against the edge
       list, then a min-aggregate per node;
     - the loop-invariant edge list and each round's labels are
@@ -920,6 +991,18 @@ def label_propagate_components(edges: DataFrame) -> DataFrame:
       so the round count adapts to the real component diameter instead
       of hard-coding a hop bound (a diameter-6 chain is regression-
       tested in tests/test_cluster.py)."""
+    src = edges.schema["src"]
+    small = driver_components(
+        edges.select("src", "dst"),
+        StructType(
+            [
+                StructField("node", src.dataType, src.nullable),
+                StructField("label", src.dataType, src.nullable),
+            ]
+        ),
+    )
+    if small is not None:
+        return small
     edges = edges.localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -1000,9 +1083,11 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains are assigned one cluster id; the DuckDB oracle is the full
     recursive-CTE transitive closure, the same fixpoint.
 
-    Scale: each round is one shuffle of (node, label) joined against
-    the checkpointed edge list; the edge list comes from the
-    already-bucketed MinHash join, never all-pairs."""
+    Scale: the edge list comes from the already-bucketed MinHash join,
+    never all-pairs. A graph of at most DRIVER_COMPONENTS_MAX_EDGES
+    (2^17) edge rows costs one bounded Arrow collect and a driver
+    union-find; above that each round is one shuffle of (node, label)
+    joined against the checkpointed edge list."""
     # bounded lazy persist (r16, guide §2.4): the symmetrizing union
     # references ``pairs`` twice, so the edge checkpoint inside
     # label_propagate_components was executing the ENTIRE MinHash
@@ -1828,8 +1913,12 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     3. MinHash+LSH near-dup pairs over the exact SURVIVORS only
        (minhash_pairs — the expensive stage runs on the already-shrunk
        set, the standard pipeline ordering);
-    4. connected components over the near-dup graph, iterated to
-       convergence (label_propagate_components);
+    4. connected components over the near-dup graph
+       (label_propagate_components): a graph of at most
+       DRIVER_COMPONENTS_MAX_EDGES (2^17, measured as about one
+       distributed round of driver work) edge rows is read in one
+       bounded Arrow collect and finished by union-find on the driver;
+       a larger one runs min-label propagation to convergence;
     5. canonical selection: every document maps through its exact rep
        to its cluster's minimum id; ``keep`` marks the one surviving
        copy per duplicate group.

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from lake_satellite_image_etl_spark.caching import persist_bounded
 from lake_satellite_image_etl_spark.io import read_table
@@ -119,10 +120,31 @@ def star_contract_components(edges: DataFrame) -> tuple[DataFrame, int]:
     cheaper; per-round ``localCheckpoint`` cuts the iterative
     lineage exactly like the propagation loop. Convergence is
     detected structurally (edge set unchanged under a round), so the
-    result is the true fixpoint, not a hop-bounded approximation."""
-    canon = _canon_edges(
-        edges.select(F.col(edges.columns[0]).alias("x"), F.col(edges.columns[1]).alias("y"))
-    ).localCheckpoint(eager=True)
+    result is the true fixpoint, not a hop-bounded approximation.
+
+    A graph of at most ``dedup.DRIVER_COMPONENTS_MAX_EDGES`` non-loop
+    pair rows is finished on the driver instead, by the same bounded
+    collect and union-find as label propagation
+    (``dedup.driver_components``), and reports ``rounds = 0``."""
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        driver_components,
+    )
+
+    xy = edges.select(F.col(edges.columns[0]).alias("x"), F.col(edges.columns[1]).alias("y"))
+    canon = _canon_edges(xy)
+    node = canon.schema["lo"]
+    small = driver_components(
+        xy.where(F.col("x") != F.col("y")),
+        StructType(
+            [
+                StructField("node", node.dataType, node.nullable),
+                StructField("label", node.dataType, True),
+            ]
+        ),
+    )
+    if small is not None:
+        return small, 0
+    canon = canon.localCheckpoint(eager=True)
     # the node set is read exactly once, by the final labels join —
     # keep it LAZY over the checkpointed initial edge set (r16: the
     # former eager checkpoint here was one extra construction job +

@@ -63,17 +63,24 @@ CONSTRUCTION_JOB_ALLOWLIST: dict[str, str] = {
     #    the round cuts as construction jobs.)
     "graph_pagerank": "iterative: rank relaxation rounds",
     "graph_shortest_path_weighted": "iterative: Bellman-Ford rounds",
-    "graph_components_star": "iterative: star-contraction rounds",
+    "graph_components_star": "iterative: one bounded edge collect, "
+    "with the distributed star-contraction rounds above N",
     "graph_bfs_distance": "iterative: level-synchronous frontier rounds",
     "graph_clustering_coefficient": "iterative: shares the triangle/"
     "degree checkpointed build",
-    "dedup_cluster_assign": "iterative: label-propagation rounds",
+    # (N = dedup.DRIVER_COMPONENTS_MAX_EDGES: a near-dup graph of at
+    #  most N edge rows is finished on the driver after one collect)
+    "dedup_cluster_assign": "iterative: one bounded edge collect, with "
+    "the distributed label-propagation rounds above N",
     "dedup_canonical_keep": "iterative: composes dedup_cluster_assign's "
-    "label-propagation rounds",
+    "one bounded edge collect, with the distributed label-propagation "
+    "rounds above N",
     "sample_cluster_safe_split": "iterative: composes "
-    "dedup_cluster_assign's label-propagation rounds",
-    "pipeline_corpus_dedup": "iterative: label_propagate_components "
-    "rounds over the survivors' MinHash pair edges",
+    "dedup_cluster_assign's one bounded edge collect, with the "
+    "distributed label-propagation rounds above N",
+    "pipeline_corpus_dedup": "iterative: label_propagate_components' "
+    "one bounded edge collect over the survivors' MinHash pair edges, "
+    "with the distributed rounds above N",
     # -- mechanics: streaming runners / external round-trips --
     "stream_cdc_batch": "mechanics: AvailableNow micro-batch executes",
     "stream_dedup_batch": "mechanics: AvailableNow micro-batch executes",

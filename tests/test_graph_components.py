@@ -1,11 +1,17 @@
 """Star-contraction connected components (operators/graph.py):
 equivalence with label propagation, the O(log²n) round-count
 advantage on long chains (its reason to exist at 100 TB), and
-structural-fixpoint properties."""
+structural-fixpoint properties. Tests of the distributed loops set
+``DRIVER_COMPONENTS_MAX_EDGES`` to 0, so their graphs do not take the
+driver path."""
 
 from __future__ import annotations
 
 import random
+
+import pytest
+
+from tests.test_cluster import _GRAPHS, _components, _loop_only, _plan
 
 
 def _star(spark, undirected_pairs):
@@ -18,45 +24,36 @@ def _star(spark, undirected_pairs):
     return {r["node"]: r["label"] for r in labels.collect()}, rounds
 
 
-def _propagate(spark, undirected_pairs):
-    from pyspark.sql import functions as F
-
-    from lake_satellite_image_etl_spark.operators.dedup import (
-        label_propagate_components,
-    )
-
-    pairs = spark.createDataFrame(undirected_pairs, "src long, dst long")
-    edges = pairs.union(pairs.select(F.col("dst"), F.col("src")))
-    return {
-        r["node"]: r["label"]
-        for r in label_propagate_components(edges).collect()
-    }
-
-
-def test_chain_converges_in_logarithmic_rounds(spark):
+def test_chain_converges_in_logarithmic_rounds(spark, monkeypatch):
     """A 64-node chain (diameter 63) needs ~63 propagation rounds; star
     contraction must land the same single min-rooted component in
     O(log²n) alternations — pinned at ≤ 10."""
+    _loop_only(monkeypatch)
     chain = [(i, i + 1) for i in range(1, 64)]
     labels, rounds = _star(spark, chain)
     assert labels == {n: 1 for n in range(1, 65)}
     assert rounds <= 10, f"star contraction took {rounds} rounds on a chain"
 
 
-def test_components_match_label_propagation_on_random_graphs(spark):
-    """Two independent algorithms, identical fixpoint: random sparse
-    graphs (dup edges, self loops, both orientations, singleton-free
-    by construction) must agree node-for-node."""
+def _random_graphs():
     rng = random.Random(7)
-    for trial in range(3):
+    for _ in range(3):
         n = 60
         pairs = [
             (rng.randrange(n), rng.randrange(n)) for _ in range(n)
         ]  # includes self-loops / dups / reversed duplicates
         pairs += [(b, a) for a, b in pairs[: n // 4]]
-        pairs = [p for p in pairs if p[0] != p[1]]
+        yield [p for p in pairs if p[0] != p[1]]
+
+
+def test_components_match_label_propagation_on_random_graphs(spark, monkeypatch):
+    """Two independent algorithms, identical fixpoint: random sparse
+    graphs (dup edges, self loops, both orientations, singleton-free
+    by construction) must agree node-for-node."""
+    _loop_only(monkeypatch)
+    for trial, pairs in enumerate(_random_graphs()):
         star_labels, _ = _star(spark, pairs)
-        prop_labels = _propagate(spark, pairs)
+        prop_labels = _components(spark, pairs)
         assert star_labels == prop_labels, f"trial {trial} diverged"
 
 
@@ -68,9 +65,10 @@ def test_two_components_and_orientation_independence(spark):
     assert labels == {9: 9, 10: 9, 11: 9, 12: 9, 20: 20, 21: 20, 22: 20}
 
 
-def test_star_input_is_immediate_fixpoint(spark):
+def test_star_input_is_immediate_fixpoint(spark, monkeypatch):
     """A min-rooted star is a fixpoint of both operations: one round
     to observe stability, then out."""
+    _loop_only(monkeypatch)
     star = [(1, k) for k in range(2, 12)]
     labels, rounds = _star(spark, star)
     assert labels == {n: 1 for n in range(1, 12)}
@@ -84,6 +82,7 @@ def test_round_cap_exhaustion_warns(spark, monkeypatch):
 
     from lake_satellite_image_etl_spark.operators import graph
 
+    _loop_only(monkeypatch)
     monkeypatch.setattr(graph, "STAR_MAX_ROUNDS", 1)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
@@ -93,6 +92,34 @@ def test_round_cap_exhaustion_warns(spark, monkeypatch):
         and "not converged" in str(w.message)
         for w in caught
     )
+
+
+_STAR_GRAPHS = {
+    **{f"random7_{i}": g for i, g in enumerate(_random_graphs())},
+    "chain64": [(i, i + 1) for i in range(1, 64)],
+    "two_components": _GRAPHS["two_components"],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("ddl", ["src long, dst long", "src int, dst int"])
+@pytest.mark.parametrize("graph", sorted(_STAR_GRAPHS))
+def test_star_driver_path_equals_loop(spark, monkeypatch, graph, ddl):
+    """The driver path returns the star loop's rows and schema, and
+    reports 0 rounds; self-loops are dropped on both paths. A bound of
+    -1 sends even the empty graph to the loop."""
+    from lake_satellite_image_etl_spark.operators.graph import (
+        star_contract_components,
+    )
+
+    pairs = spark.createDataFrame(_STAR_GRAPHS[graph] + [(99, 99)], ddl)
+    fast, fast_rounds = star_contract_components(pairs)
+    assert fast_rounds == 0 and "LocalTableScan" in _plan(fast)
+    _loop_only(monkeypatch, -1 if graph == "empty" else 0)
+    loop, loop_rounds = star_contract_components(pairs)
+    assert loop_rounds >= 1
+    assert fast.schema == loop.schema
+    assert sorted(fast.collect()) == sorted(loop.collect())
 
 
 # ---------------- triangle counting ------------------------------------

@@ -193,10 +193,13 @@ def main() -> int:
         "`shuf` = shuffle exchanges, `bc` = broadcast exchanges,",
         "`BHJ`/`SMJ` = hash/sort-merge joins, `push` = filters reached the",
         "scan, `arrow` = Arrow-batched pandas stage (the sanctioned Python",
-        "path). Notes: queries whose heavy input is an eager",
-        "localCheckpoint (dedup_cluster_assign, pipeline_corpus_dedup)",
-        "show only the post-checkpoint plan — their upstream shuffle",
-        "story is the dedup_minhash_lsh row. A blank `push` on a",
+        "path). Notes: queries that finish a small near-dup graph's",
+        "connected components on the driver (dedup_cluster_assign,",
+        "dedup_canonical_keep, sample_cluster_safe_split,",
+        "pipeline_corpus_dedup, graph_components_star) show the",
+        "components as a LocalTableScan: the pair pipeline ran in the",
+        "bounded edge collect at construction, and its shuffle story",
+        "is the dedup_minhash_lsh row. A blank `push` on a",
         "documents/embeddings query means the query intentionally scans",
         "the full table (no filter to push). Counts are SUBSTRING",
         "counts over the explain text: a lazily persist()ed",
