@@ -44,6 +44,7 @@ parallelism.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import numpy as np
@@ -136,38 +137,36 @@ def stack_bands(band_rows: DataFrame) -> DataFrame:
     raster [bands, h, w] (main.py:206-232 stacks per-band GeoTIFFs with
     np.stack at main.py:223). Grouped-map pandas UDF: the shuffle key
     is entity_id, each group is one image's bands — tiny state."""
+    return band_rows.groupBy("entity_id").applyInPandas(_stack_entity, STACKED_SCHEMA)
 
-    def _stack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("band_idx")
-        w = int(pdf["width"].iloc[0])
-        h = int(pdf["height"].iloc[0])
-        arrs = [
-            np.frombuffer(b, dtype=np.uint8).reshape(h, w) for b in pdf["data"]
-        ]
-        img = np.stack(arrs)  # (bands, h, w) — main.py:223
-        assert img.dtype == np.uint8  # main.py:270 dtype invariant
-        return pd.DataFrame(
-            [
-                (
-                    int(pdf["entity_id"].iloc[0]),
-                    w,
-                    h,
-                    len(arrs),
-                    img.tobytes(),
-                )
-            ],
-            columns=["entity_id", "width", "height", "bands", "data"],
-        )
 
-    return band_rows.groupBy("entity_id").applyInPandas(_stack, STACKED_SCHEMA)
+def _stack_entity(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``stack_bands``' per-entity kernel."""
+    pdf = pdf.sort_values("band_idx")
+    w = int(pdf["width"].iloc[0])
+    h = int(pdf["height"].iloc[0])
+    arrs = [
+        np.frombuffer(b, dtype=np.uint8).reshape(h, w) for b in pdf["data"]
+    ]
+    img = np.stack(arrs)  # (bands, h, w) — main.py:223
+    assert img.dtype == np.uint8  # main.py:270 dtype invariant
+    return pd.DataFrame(
+        [
+            (
+                int(pdf["entity_id"].iloc[0]),
+                w,
+                h,
+                len(arrs),
+                img.tobytes(),
+            )
+        ],
+        columns=["entity_id", "width", "height", "bands", "data"],
+    )
 
 
 # ---------------------------------------------------------------- U4/U5
 
-# NOTE: explicit DataType (not a DDL string) — string return types are
-# parsed lazily on the executor, where no SparkSession exists.
-@pandas_udf(ArrayType(DoubleType()))
-def channel_means(data: pd.Series, width: pd.Series, height: pd.Series, bands: pd.Series) -> pd.Series:
+def _channel_means(data: pd.Series, width: pd.Series, height: pd.Series, bands: pd.Series) -> pd.Series:
     """U4: per-channel mean excluding nodata — exactly
     ``np.mean(channel[channel != 0])`` per channel (main.py:247-251).
     An all-nodata channel yields NULL (numpy NaN → None), mirroring
@@ -183,8 +182,7 @@ def channel_means(data: pd.Series, width: pd.Series, height: pd.Series, bands: p
     return pd.Series(out)
 
 
-@pandas_udf(DoubleType())
-def white_fraction(data: pd.Series, width: pd.Series, height: pd.Series, bands: pd.Series) -> pd.Series:
+def _white_fraction(data: pd.Series, width: pd.Series, height: pd.Series, bands: pd.Series) -> pd.Series:
     """U5: white-pixel fraction (main.py:259-286). Transpose to
     (w, h, c); out-of-bounds = max across channels == nodata;
     white = min >= 153 and spread <= 25; fraction = white / in-bounds."""
@@ -202,6 +200,14 @@ def white_fraction(data: pd.Series, width: pd.Series, height: pd.Series, bands: 
         n_in_bounds = is_oob.size - is_oob.sum()  # main.py:279
         out.append(float(is_white.sum() / n_in_bounds) if n_in_bounds else None)
     return pd.Series(out)
+
+
+# The UDFs wrap module-level kernels, which a worker loads by reference
+# (see ``session``). NOTE: explicit DataType (not a DDL string) — string
+# return types are parsed lazily on the executor, where no SparkSession
+# exists.
+channel_means = pandas_udf(_channel_means, ArrayType(DoubleType()))
+white_fraction = pandas_udf(_white_fraction, DoubleType())
 
 
 # ---------------------------------------------------------------- U3
@@ -539,49 +545,54 @@ def fetch_remote_bands(
     no shuffle beyond that repartition. Output schema = input columns
     + (content binary, n_bytes long).
     """
-    import urllib.request
-    import zipfile
-    from io import BytesIO
-
     in_cols = urls.columns
     if fetch_partitions:
         urls = urls.repartition(fetch_partitions)
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in urls.schema.fields
     ) + ", content binary, n_bytes long"
+    return urls.mapInPandas(
+        functools.partial(_fetch_batches, url_col, member_col, in_cols), out_schema
+    )
 
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            members = (
-                pdf[member_col].values
-                if member_col
-                else [None] * len(pdf)
-            )
-            for url, row_member in zip(pdf[url_col].values, members):
-                with urllib.request.urlopen(url) as resp:
-                    payload = resp.read()
-                if payload[:4] == b"PK\x03\x04":
-                    with zipfile.ZipFile(BytesIO(payload)) as zf:
-                        names = zf.namelist()
-                        member = (
-                            row_member
-                            if member_col
-                            else names[0] if len(names) == 1 else None
+
+def _fetch_batches(
+    url_col: str, member_col: str | None, in_cols: list[str], batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    """``fetch_remote_bands``' kernel: GET each URL, unzip zip payloads."""
+    import urllib.request
+    import zipfile
+    from io import BytesIO
+
+    for pdf in batches:
+        contents = []
+        members = (
+            pdf[member_col].values
+            if member_col
+            else [None] * len(pdf)
+        )
+        for url, row_member in zip(pdf[url_col].values, members):
+            with urllib.request.urlopen(url) as resp:
+                payload = resp.read()
+            if payload[:4] == b"PK\x03\x04":
+                with zipfile.ZipFile(BytesIO(payload)) as zf:
+                    names = zf.namelist()
+                    member = (
+                        row_member
+                        if member_col
+                        else names[0] if len(names) == 1 else None
+                    )
+                    if member is None:
+                        raise ValueError(
+                            f"ambiguous zip ({len(names)} members) and "
+                            "no member_col given"
                         )
-                        if member is None:
-                            raise ValueError(
-                                f"ambiguous zip ({len(names)} members) and "
-                                "no member_col given"
-                            )
-                        payload = zf.read(member)
-                contents.append(payload)
-            out = pdf.copy()
-            out["content"] = contents
-            out["n_bytes"] = [len(c) for c in contents]
-            yield out[in_cols + ["content", "n_bytes"]]
-
-    return urls.mapInPandas(_fetch, out_schema)
+                    payload = zf.read(member)
+            contents.append(payload)
+        out = pdf.copy()
+        out["content"] = contents
+        out["n_bytes"] = [len(c) for c in contents]
+        yield out[in_cols + ["content", "n_bytes"]]
 
 
 # ---------------------------------------------------------------- queries

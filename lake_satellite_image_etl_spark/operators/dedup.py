@@ -21,6 +21,8 @@ has a full DuckDB oracle.
 
 from __future__ import annotations
 
+import functools
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1486,7 +1488,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor (~GBs); beyond that the scale paths are the LSH/IVF
     operators in operators/similarity.py."""
     import numpy as np
-    import pandas as pd
 
     emb = read_table(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", qvec_of(F.col("embedding")).alias("qv"))
@@ -1534,30 +1535,36 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         on_evict=lambda old_bc: old_bc.unpersist(blocking=False),
     )
 
-    def block(batches):
-        b_ids, b_mat, b_norms = bc.value
-        for pdf in batches:
-            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            a_mat = np.array(list(pdf["qv"]), dtype=np.int64)
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
-            dots = (a_mat @ b_mat.T).astype(np.float64)
-            cos = dots / np.outer(a_norms, b_norms)
-            ai, bi = np.where(
-                (cos >= COSINE_DUP_THRESHOLD) & (a_ids[:, None] < b_ids[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_a": a_ids[ai],
-                    "vec_b": b_ids[bi],
-                    "cos_exact": cos[ai, bi],
-                }
-            )
-
     # rounding stays JVM-side: np.round is half-to-even while the
     # oracle (and every other query here) rounds HALF_UP.
     return q.mapInPandas(
-        block, schema="vec_a long, vec_b long, cos_exact double"
+        functools.partial(_cosine_block, bc), schema="vec_a long, vec_b long, cos_exact double"
     ).select("vec_a", "vec_b", F.round("cos_exact", 6).alias("cos_sim"))
+
+
+def _cosine_block(bc, batches):
+    """``dedup_embedding_cosine``' kernel: each batch's rows against the
+    broadcast candidate matrix in one int64 matmul."""
+    import numpy as np
+    import pandas as pd
+
+    b_ids, b_mat, b_norms = bc.value
+    for pdf in batches:
+        a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        a_mat = np.array(list(pdf["qv"]), dtype=np.int64)
+        a_norms = np.sqrt((a_mat * a_mat).sum(axis=1).astype(np.float64))
+        dots = (a_mat @ b_mat.T).astype(np.float64)
+        cos = dots / np.outer(a_norms, b_norms)
+        ai, bi = np.where(
+            (cos >= COSINE_DUP_THRESHOLD) & (a_ids[:, None] < b_ids[None, :])
+        )
+        yield pd.DataFrame(
+            {
+                "vec_a": a_ids[ai],
+                "vec_b": b_ids[bi],
+                "cos_exact": cos[ai, bi],
+            }
+        )
 
 
 #: Hyperplane-sign banding for the LSH dedup path: 64 sign bits split

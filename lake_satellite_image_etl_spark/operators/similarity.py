@@ -15,6 +15,7 @@ cosine ordering can never diverge between engines.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -1099,51 +1100,8 @@ def ivf_assign(
     def assign(art, rows: DataFrame, keep: int | None = None) -> DataFrame:
         labels, cmat, cnrm, label_type = art
         bc = spark.sparkContext.broadcast((labels, cmat, cnrm))
-
-        def rank_batches(batches):
-            import numpy as _np
-            import pandas as _pd
-
-            lab, cm, cnr = bc.value
-            k = len(lab)
-            for pdf in batches:
-                b = len(pdf)
-                if not b:
-                    continue
-                x = _np.stack(pdf["qv"].values).astype(_np.int64, copy=False)
-                nrm = pdf["nrm"].to_numpy(dtype=_np.float64)
-                cos = (x @ cm.T).astype(_np.float64) / (
-                    nrm[:, None] * cnr[None, :]
-                )
-                # columns are pre-sorted by label, so a STABLE argsort
-                # on -cos reproduces orderBy(desc(c_cos), asc(c_label))
-                kk = k if keep is None else min(keep, k)
-                order = _np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-                rows = _np.repeat(_np.arange(b), kk)
-                cols = order.ravel()
-                # qv/nrm ride ALONG in the kernel output (r16, guide
-                # §2.4): the batch already holds them, so re-attaching
-                # them with a post-kernel equi-join on vec_id — which
-                # every consumer of the assignment then paid as a full
-                # shuffle of the vector table per action — is a free
-                # column copy here instead. keep ≤ n_probe bounds the
-                # duplication at n_probe vectors per input vector, and
-                # no exchange replaces a removed one.
-                yield _pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy()[rows],
-                        "qv": pdf["qv"].values[rows],
-                        "nrm": nrm[rows],
-                        "c_label": lab[cols],
-                        "c_cos": cos[rows, cols],
-                        "crank": _np.tile(
-                            _np.arange(1, kk + 1, dtype=_np.int32), b
-                        ),
-                    }
-                )
-
         return rows.mapInPandas(
-            rank_batches,
+            functools.partial(_rank_batches, bc, keep),
             schema=(
                 f"vec_id long, qv array<long>, nrm double, "
                 f"c_label {label_type}, c_cos double, crank int"
@@ -1184,6 +1142,51 @@ def ivf_assign(
         if memo is not None:
             memo[(memo_path, seed_bits)] = (stat_key, art)
     return assign(art, n, keep=keep_ranks)
+
+
+def _rank_batches(bc, keep: int | None, batches):
+    """``ivf_assign``' kernel: rank each batch's vectors against the
+    broadcast codebook, keeping the top ``keep`` cells."""
+    import numpy as _np
+    import pandas as _pd
+
+    lab, cm, cnr = bc.value
+    k = len(lab)
+    for pdf in batches:
+        b = len(pdf)
+        if not b:
+            continue
+        x = _np.stack(pdf["qv"].values).astype(_np.int64, copy=False)
+        nrm = pdf["nrm"].to_numpy(dtype=_np.float64)
+        cos = (x @ cm.T).astype(_np.float64) / (
+            nrm[:, None] * cnr[None, :]
+        )
+        # columns are pre-sorted by label, so a STABLE argsort
+        # on -cos reproduces orderBy(desc(c_cos), asc(c_label))
+        kk = k if keep is None else min(keep, k)
+        order = _np.argsort(-cos, axis=1, kind="stable")[:, :kk]
+        rows = _np.repeat(_np.arange(b), kk)
+        cols = order.ravel()
+        # qv/nrm ride ALONG in the kernel output (r16, guide
+        # §2.4): the batch already holds them, so re-attaching
+        # them with a post-kernel equi-join on vec_id — which
+        # every consumer of the assignment then paid as a full
+        # shuffle of the vector table per action — is a free
+        # column copy here instead. keep ≤ n_probe bounds the
+        # duplication at n_probe vectors per input vector, and
+        # no exchange replaces a removed one.
+        yield _pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"].to_numpy()[rows],
+                "qv": pdf["qv"].values[rows],
+                "nrm": nrm[rows],
+                "c_label": lab[cols],
+                "c_cos": cos[rows, cols],
+                "crank": _np.tile(
+                    _np.arange(1, kk + 1, dtype=_np.int32), b
+                ),
+            }
+        )
 
 
 def ivf_topk(
@@ -1753,34 +1756,11 @@ def pq_adc_topk(
     )
     bitvals = np.array([1 << b for b in range(PQ_BITS)], dtype=np.int64)
 
-    def seed_cells(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            nb = len(pdf)
-            if not nb:
-                continue
-            x = _np.stack(pdf["qv"].values).astype(_np.int64, copy=False)
-            xs = x.reshape(nb, PQ_M, PQ_SUB)
-            dots = _np.einsum("vms,mbs->vmb", xs, wmat)
-            cells = ((dots >= 0) * bitvals[None, None, :]).sum(axis=2)
-            yield _pd.DataFrame(
-                {
-                    "vec_id": _np.repeat(pdf["vec_id"].to_numpy(), PQ_M),
-                    "m": _np.tile(
-                        _np.arange(PQ_M, dtype=_np.int32), nb
-                    ),
-                    "sv": list(xs.reshape(nb * PQ_M, PQ_SUB)),
-                    "cell": cells.reshape(-1).astype(_np.int32),
-                }
-            )
-
     # localCheckpoint: two consumers below (cell counts, component
     # sums) must not each recompute the kernel scan.
     subs = (
         q.mapInPandas(
-            seed_cells,
+            functools.partial(_seed_cells, wmat, bitvals),
             schema="vec_id long, m int, sv array<long>, cell int",
         )
         .localCheckpoint(eager=False)
@@ -1870,44 +1850,11 @@ def pq_adc_topk(
         (F.col("vec_id") % salt_n).cast("int").alias("salt"),
     )
 
-    def assign_codes(left, right):
-        import numpy as _np
-        import pandas as _pd
-
-        if not len(left):
-            return _pd.DataFrame(
-                {
-                    "vec_id": _np.array([], dtype=_np.int64),
-                    "m": _np.array([], dtype=_np.int32),
-                    "cell": _np.array([], dtype=_np.int64),
-                    "cn2": _np.array([], dtype=_np.int64),
-                }
-            )
-        right = right.sort_values("cell").reset_index(drop=True)
-        cm = _np.stack(right["cq"].values).astype(_np.int64, copy=False)
-        cn2 = right["cn2"].to_numpy(dtype=_np.int64)
-        labels = right["cell"].to_numpy(dtype=_np.int64)
-        x = _np.stack(left["sv"].values).astype(_np.int64, copy=False)
-        svn2 = _np.einsum("vs,vs->v", x, x).astype(_np.float64)
-        a = (x @ cm.T).astype(_np.float64) / (
-            _np.sqrt(svn2)[:, None]
-            * _np.sqrt(cn2.astype(_np.float64))[None, :]
-        )
-        best = _np.argmax(a, axis=1)
-        return _pd.DataFrame(
-            {
-                "vec_id": left["vec_id"].to_numpy(),
-                "m": left["m"].to_numpy(),
-                "cell": labels[best],
-                "cn2": cn2[best],
-            }
-        )
-
     codes = (
         subs_k.groupBy("m", "salt")
         .cogroup(cent_rep.groupBy("cm", "csalt"))
         .applyInPandas(
-            assign_codes,
+            _assign_codes,
             schema="vec_id long, m int, cell long, cn2 long",
         )
     )
@@ -2055,6 +2002,68 @@ def pq_adc_topk(
             F.round("cos_exact_raw", 6).alias("cos_exact"),
             "rank",
         )
+    )
+
+
+def _seed_cells(wmat, bitvals, batches):
+    """``pq_adc_topk``' kernel: each vector's PQ_M sub-vectors and
+    their sign-LSH seed cells."""
+    import numpy as _np
+    import pandas as _pd
+
+    for pdf in batches:
+        nb = len(pdf)
+        if not nb:
+            continue
+        x = _np.stack(pdf["qv"].values).astype(_np.int64, copy=False)
+        xs = x.reshape(nb, PQ_M, PQ_SUB)
+        dots = _np.einsum("vms,mbs->vmb", xs, wmat)
+        cells = ((dots >= 0) * bitvals[None, None, :]).sum(axis=2)
+        yield _pd.DataFrame(
+            {
+                "vec_id": _np.repeat(pdf["vec_id"].to_numpy(), PQ_M),
+                "m": _np.tile(
+                    _np.arange(PQ_M, dtype=_np.int32), nb
+                ),
+                "sv": list(xs.reshape(nb * PQ_M, PQ_SUB)),
+                "cell": cells.reshape(-1).astype(_np.int32),
+            }
+        )
+
+
+def _assign_codes(left, right):
+    """``pq_adc_topk``' cogroup kernel: each sub-vector's nearest
+    codebook cell by cosine."""
+    import numpy as _np
+    import pandas as _pd
+
+    if not len(left):
+        return _pd.DataFrame(
+            {
+                "vec_id": _np.array([], dtype=_np.int64),
+                "m": _np.array([], dtype=_np.int32),
+                "cell": _np.array([], dtype=_np.int64),
+                "cn2": _np.array([], dtype=_np.int64),
+            }
+        )
+    right = right.sort_values("cell").reset_index(drop=True)
+    cm = _np.stack(right["cq"].values).astype(_np.int64, copy=False)
+    cn2 = right["cn2"].to_numpy(dtype=_np.int64)
+    labels = right["cell"].to_numpy(dtype=_np.int64)
+    x = _np.stack(left["sv"].values).astype(_np.int64, copy=False)
+    svn2 = _np.einsum("vs,vs->v", x, x).astype(_np.float64)
+    a = (x @ cm.T).astype(_np.float64) / (
+        _np.sqrt(svn2)[:, None]
+        * _np.sqrt(cn2.astype(_np.float64))[None, :]
+    )
+    best = _np.argmax(a, axis=1)
+    return _pd.DataFrame(
+        {
+            "vec_id": left["vec_id"].to_numpy(),
+            "m": left["m"].to_numpy(),
+            "cell": labels[best],
+            "cn2": cn2[best],
+        }
     )
 
 

@@ -9,11 +9,34 @@ oracle (DuckDB timestamps are UTC-naive).
 
 ``shuffle_partitions`` defaults to the local core count; on a real
 cluster set it (or let AQE coalesce) to ~2-3× total executor cores.
+
+Per-task cost of a Python worker. PySpark 4.1.2 calls
+``importlib.invalidate_caches()`` at the start of every task it hands a
+reused Python worker (``pyspark/worker_util.py:144``, after it adds the
+job's ``--py-files``). Before Python 3.12, ``zipimporter.invalidate_caches``
+re-reads the whole zip directory of its archive on every call. A
+worker's ``sys.path`` holds about 16 zip importers: 12 for
+``pyspark.zip`` (its root and 11 package directories inside it), 2 for
+the py4j zip and 2 for ``spark-core_2.13-4.1.2.jar`` (5,359 entries).
+Together they cost about 83 ms of CPU per task; summed over a small
+``image_etl`` batch's tasks that is more than its kernels' CPU. Importing this module therefore installs
+``_reread_changed_zips_only`` (below), which skips the re-read of an
+archive whose mtime and size have not changed. Every process that
+imports the package gets it, Python workers included, as long as what
+they unpickle imports the package. So a callable the package ships to
+workers must be a module-level function, or a ``functools.partial`` of
+one: cloudpickle sends those by reference, and loading them imports
+their module. A nested function is sent by value and imports only the
+names its body uses; over stdlib and numpy names alone it imports
+nothing of the package (see ``sinks.write_binary_artifacts``).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -40,13 +63,14 @@ def get_spark(
         # (the reference enables the same flag, template.yml:97).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Parallelism FLOOR for file scans: a small-but-CPU-heavy input
-        # (one parquet file under maxPartitionBytes fused below
-        # tokenize/shingle/UDF stages) otherwise runs as ONE task on an
-        # idle cluster. This is a floor tied to core count, not a byte
-        # cap — at real scale splits already exceed cores and it's a
-        # no-op. (Found via the 120 K smoke: every doc query looked
-        # ~20× super-linear because the fixture was a single split.)
+        # Split-size target for file scans: Spark caps a split at
+        # max(openCostInBytes, input bytes / this number), so an input
+        # of more than 4 MB per core is cut into about this many
+        # splits or more. It cannot split a smaller input: under
+        # spark.sql.files.openCostInBytes (4 MB) per core a file stays
+        # one split, and a parquet file with one row group feeds one
+        # task whatever the split size. At real scale splits already
+        # exceed cores and it is a no-op.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         # InferFiltersFromGenerate copies the generator's child
         # expression into a `size(...) > 0` Filter — for the HOF-heavy
@@ -67,6 +91,37 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def _reread_changed_zips_only() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when its ``(st_mtime_ns, st_size)`` differs from the one the same
+    importer saw at its last re-read, or cannot be read. Imports resolve
+    as before; only the re-read of an archive whose bytes cannot have
+    changed is skipped. An importer's first call always re-reads.
+    Idempotent, and a no-op from Python 3.12, which re-reads lazily."""
+    if sys.version_info >= (3, 12):
+        return
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_rereads_changed_only", False):
+        return
+
+    @functools.wraps(reread)
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            reread(self)
+            self._archive_stamp = stamp
+
+    invalidate_caches._rereads_changed_only = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_reread_changed_zips_only()
 
 
 def stop_spark() -> None:

@@ -13,6 +13,7 @@ thread pools disappear into partition parallelism.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -103,24 +104,32 @@ def write_binary_artifacts(df: DataFrame, out_dir: str, key_col: str, data_col: 
     count comes
     from an accumulator incremented in the same pass — counting with a
     second action would re-execute the entire upstream lineage
-    (ADVICE r2) and could disagree with what was written."""
+    (ADVICE r2) and could disagree with what was written.
+
+    The partition writer is a module-level function bound with
+    ``functools.partial``, so the worker that runs it imports this
+    package (see ``session``'s note on the per-task worker cost)."""
     os.makedirs(out_dir, exist_ok=True)
     rows = df.select(key_col, data_col)
     n_written = rows.sparkSession.sparkContext.accumulator(0)
-
-    def _write_partition(it) -> None:
-        for row in it:
-            key = row[key_col]
-            path = os.path.join(out_dir, key)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-            with open(tmp, "wb") as f:
-                f.write(bytes(row[data_col]))
-            os.replace(tmp, path)
-            n_written.add(1)
-
-    rows.foreachPartition(_write_partition)
+    rows.foreachPartition(
+        functools.partial(_write_partition, out_dir, key_col, data_col, n_written)
+    )
     return n_written.value
+
+
+def _write_partition(out_dir: str, key_col: str, data_col: str, n_written, it) -> None:
+    """``write_binary_artifacts``' per-partition writer: each blob goes
+    to a uuid tmp name, then ``os.replace`` onto its key."""
+    for row in it:
+        key = row[key_col]
+        path = os.path.join(out_dir, key)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "wb") as f:
+            f.write(bytes(row[data_col]))
+        os.replace(tmp, path)
+        n_written.add(1)
 
 
 def write_jdbc_upsert(
@@ -211,34 +220,39 @@ def write_dbapi_upsert(
     ``%s`` placeholder per column in ``cols`` order. Returns rows
     actually inserted, summed from cursor rowcounts via an
     accumulator in the same pass (a second counting action would
-    re-run the lineage)."""
+    re-run the lineage). The partition loop is a module-level function
+    bound with ``functools.partial``, as in ``write_binary_artifacts``."""
     rows = df.select(*cols)
     n_inserted = rows.sparkSession.sparkContext.accumulator(0)
-
-    def _upsert_partition(it) -> None:
-        conn = connect_fn()
-        try:
-            cur = conn.cursor()
-            batch: list[tuple] = []
-
-            def flush() -> None:
-                if batch:
-                    cur.executemany(upsert_sql, batch)
-                    if cur.rowcount and cur.rowcount > 0:
-                        n_inserted.add(cur.rowcount)
-                    batch.clear()
-
-            for row in it:
-                batch.append(tuple(row))
-                if len(batch) >= batch_size:
-                    flush()
-            flush()
-            conn.commit()
-        finally:
-            conn.close()
-
-    rows.foreachPartition(_upsert_partition)
+    rows.foreachPartition(
+        functools.partial(_upsert_partition, connect_fn, upsert_sql, batch_size, n_inserted)
+    )
     return n_inserted.value
+
+
+def _upsert_partition(connect_fn, upsert_sql: str, batch_size: int, n_inserted, it) -> None:
+    """``write_dbapi_upsert``' per-partition loop: one connection,
+    ``executemany`` per ``batch_size`` rows, one commit."""
+    conn = connect_fn()
+    try:
+        cur = conn.cursor()
+        batch: list[tuple] = []
+
+        def flush() -> None:
+            if batch:
+                cur.executemany(upsert_sql, batch)
+                if cur.rowcount and cur.rowcount > 0:
+                    n_inserted.add(cur.rowcount)
+                batch.clear()
+
+        for row in it:
+            batch.append(tuple(row))
+            if len(batch) >= batch_size:
+                flush()
+        flush()
+        conn.commit()
+    finally:
+        conn.close()
 
 
 def write_partitioned_parquet(
