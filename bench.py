@@ -343,9 +343,10 @@ def _merge_calibration(pre: dict, post: dict) -> dict:
 #: real run uses the monotonic clock)
 _now = time.monotonic
 
-#: fresh-JVM startup estimate used by the isolated-phase budgeter —
-#: the ~10 s figure every batched/isolated child has shown since r6
-JVM_STARTUP_EST_SEC = 10.0
+#: fresh-JVM startup estimate used by the isolated-phase budgeter:
+#: the ~15 s per child that floored isolated runs measured
+#: (``_iso_est_sec``: ~27 s per child for ~5 s queries ≈ 15 + 2·q)
+JVM_STARTUP_EST_SEC = 15.0
 
 #: rows under an explicit verdict watch (VERDICT r16 item 5:
 #: dq_knn_recall_eval's 8.12 s driver reading could not be

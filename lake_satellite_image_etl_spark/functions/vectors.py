@@ -45,33 +45,6 @@ def dot_long(a: Column, b: Column) -> Column:
     )
 
 
-def pdot_long(a: Column, b: Column) -> Column:
-    """Arrow-batched numpy twin of ``dot_long`` — bit-identical
-    results (int64 multiply-sum is exact either way; overflow bounds:
-    quantized components ≤ ~10⁴·‖x‖∞ keep 64-dim dots ≪ 2⁶³), at a
-    fraction of the CPU: Catalyst evaluates ``zip_with`` +
-    ``aggregate`` lambdas per ELEMENT, so an n × cells affinity
-    matrix pays ~interpreted 2·DIM steps per pair, where one numpy
-    einsum per Arrow batch is a single vectorized multiply-sum.
-    Equivalence is pinned in
-    tests/test_properties.py::test_pdot_matches_hof_dot.
-
-    Use in CROSS-rank hot paths (vector × centroid affinity); keep
-    ``dot_long`` for one-dot-per-row plans where staying inside
-    whole-stage codegen beats an Arrow round trip."""
-
-    @F.pandas_udf("long")
-    def _pdot(x, y):
-        import numpy as np
-        import pandas as pd
-
-        xm = np.stack(x.values).astype(np.int64, copy=False)
-        ym = np.stack(y.values).astype(np.int64, copy=False)
-        return pd.Series(np.einsum("ij,ij->i", xm, ym))
-
-    return _pdot(a, b)
-
-
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of quantized vectors — exact integer dots,
     one IEEE sqrt/divide at the end (identical across engines).

@@ -17,8 +17,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 #: every fixture table the driver materializes (TESTDATA.md)
 TABLES = (
@@ -98,6 +101,23 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Driver-side ``rows`` (tuples) as a frame with the DDL ``schema``.
+
+    Built from a pyarrow table, so it plans as ``LocalTableScan`` and
+    starts no Python worker task; ``createDataFrame(list)`` plans
+    ``Scan ExistingRDD`` and runs one worker task per
+    default-parallelism slice, whatever the row count.
+    """
+    struct = DataType.fromDDL(schema)
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(struct.names, r)) for r in rows],
+            schema=to_arrow_schema(struct),
+        )
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

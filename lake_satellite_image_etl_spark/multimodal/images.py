@@ -2,11 +2,10 @@
 ``BinaryType`` payloads + typed metadata, with decode / feature-extract
 / frame-sample kernels as Arrow pandas UDFs over ``mapInPandas``.
 
-Real codecs (PIL/libjpeg/ffmpeg) are not in this container, so decode
-of standard formats is gated behind an import-try and raises
-``NotImplementedError`` — the deterministic ``FIMG`` container below
-stands in, keeping every piece of Spark-side plumbing (schema,
-batching, UDF signatures, partition behavior) real and tested.
+Real codecs (PIL/libjpeg/ffmpeg) are not dependencies of this package,
+so the deterministic ``FIMG`` container below stands in, keeping every
+piece of Spark-side plumbing (schema, batching, UDF signatures,
+partition behavior) real and tested.
 
 FIMG layout (little-endian): magic ``FIMG`` | uint16 width |
 uint16 height | uint8 channels | payload uint8[c*h*w] (C-order).
@@ -44,18 +43,6 @@ def decode_fimg(blob: bytes) -> np.ndarray:
     if magic != MAGIC:
         raise ValueError("not a FIMG blob")
     return np.frombuffer(blob, dtype=np.uint8, offset=HEADER.size).reshape(c, h, w)
-
-
-def decode_standard_image(blob: bytes) -> np.ndarray:  # pragma: no cover
-    """Decode JPEG/PNG/TIFF — requires PIL, absent here by design."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "standard image codecs unavailable in this environment; "
-            "use the FIMG container (encode_fimg/decode_fimg)"
-        ) from exc
-    raise NotImplementedError
 
 
 def synth_fimg(entity_id: int, width: int = 12, height: int = 12, channels: int = 3) -> bytes:

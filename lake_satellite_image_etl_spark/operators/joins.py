@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lake_satellite_image_etl_spark.io import read_table
+from lake_satellite_image_etl_spark.io import local_frame, read_table
 from lake_satellite_image_etl_spark.registry import query
 
 
@@ -62,7 +62,8 @@ def join_cross_configs(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin costs |configs| × scan, no shuffle.
     """
     n = read_table(spark, sf_dir, "nation")
-    configs = spark.createDataFrame(
+    configs = local_frame(
+        spark,
         [
             ("COPERNICUS/S2_SR_HARMONIZED", "CLOUDY_PIXEL_PERCENTAGE", 20.0),
             ("LANDSAT/LC09/C02/T1_L2", "CLOUD_COVER", 20.0),

@@ -1074,7 +1074,7 @@ def ivf_assign(
         sf0.1 geometry; the matmul form is ~1 s and transfers each
         vector ONCE. Exactness is preserved end to end: integer
         dots are exact in int64 (the equivalence rule pinned by
-        tests/test_properties.py::test_pdot_matches_hof_dot), the
+        tests/test_properties.py::test_dot_long_matches_numpy_einsum), the
         norms stay JVM-computed (collected with the codebook /
         carried on n), the divide is one IEEE op in either engine,
         and the (-cos, label) tie order is a stable argsort over

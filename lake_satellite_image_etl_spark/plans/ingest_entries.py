@@ -33,7 +33,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lake_satellite_image_etl_spark.io import read_jdbc, read_table
+from lake_satellite_image_etl_spark.io import local_frame, read_jdbc, read_table
 from lake_satellite_image_etl_spark.registry import query
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -423,7 +423,7 @@ def sink_artifact_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"artifact sink wrote {n_written} blobs but the store "
             f"holds {len(manifest)} — non-atomic or lost write"
         )
-    return spark.createDataFrame(manifest, schema="key string, n_bytes bigint")
+    return local_frame(spark, manifest, "key string, n_bytes bigint")
 
 
 @query(

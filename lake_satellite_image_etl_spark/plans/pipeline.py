@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lake_satellite_image_etl_spark.functions.scalars import artifact_key
+from lake_satellite_image_etl_spark.io import local_frame
 from lake_satellite_image_etl_spark.multimodal.raster import (
     _SQL_RASTER_PX,
     WHITE_MIN,
@@ -155,8 +156,8 @@ def pipeline_image_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("means")[2], 6).alias("blue_average"),
         F.round("wf", 6).alias("white_fraction"),
     )
-    configs = spark.createDataFrame(
-        CONFIGS, "dataset string, cloud_field string, cloud_limit double"
+    configs = local_frame(
+        spark, CONFIGS, "dataset string, cloud_field string, cloud_limit double"
     )
     fanout = stats.crossJoin(F.broadcast(configs)).select(
         F.col("entity_id").alias("waterbody_id"),

@@ -4,10 +4,19 @@ Every operator module registers its demonstration queries (and, when
 SQL-expressible, the DuckDB oracle) with the ``@query`` decorator;
 ``__spark_entry__`` just re-exports the collected dicts. Keys are the
 operator IDs from SURVEY.md §2.
+
+The driver's correctness gate checks queries in dict order and caps at
+the first ~50, so ``load_all`` returns them in an order derived from
+the committed ``CORRECTNESS_r*.json`` rounds (``rotation_order``);
+``tools/rotation_audit.py`` reports on that window.
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from importlib import import_module
 
@@ -62,1009 +71,73 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-#: Canonical registration order for the driver contract. The driver's
-#: correctness gate checks queries in dict order and (observed r2) caps
-#: at the first ~50 entries, so this list front-loads by verification
-#: value. Names not listed keep insertion order after the listed ones.
-_PRIORITY = (
-    # ================= r17 driver window (50 slots) ================
-    # Runs the r16 pre-plan (VERDICT r16 item 4) with this round's
-    # rule-1 influx resolved as follows:
-    # Slots 1-13: the 13 displaced r11 rows — exactly at the 6-round
-    #   SLA bound this round; they lead per the pre-plan and
-    #   tools/rotation_audit.py (re-run after this edit: ok=true,
-    #   zero breach, zero never-checked).
-    # Rule 1 (changed kernel), 10 rows — every kernel the r17
-    #   optimizations touched (each oracle-verified with
-    #   tools/compare.py at sf0.01 AND sf0.001 at change time):
-    #   - similarity_ivf_pq + similarity_pq_adc (shared pq_adc_topk:
-    #     the router carries c_label, routed ADC scores pre-cut to
-    #     per-(query, cell) top-rerank before the global window; the
-    #     non-routed pq_adc path is code-identical but shares the
-    #     function, so both re-verify);
-    #   - text_tfidf_top_terms / text_rake_keyphrases /
-    #     corpus_token_budget_split (bounded lazy persists on shared
-    #     subtrees that Catalyst recomputed per consumer);
-    #   - dedup_containment (persisted the twice-referenced per-doc
-    #     shingle-size table) and dedup_ngram_jaccard (persisted the
-    #     prefix table that is both sides of the candidate self-join);
-    #   - graph_bfs_distance / graph_triangle_count /
-    #     graph_clustering_coefficient (co-purchase pair build:
-    #     self-join → groupBy + pair_combos HOF expansion;
-    #     graph_shortest_path_weighted deliberately NOT changed — its
-    #     weights count row-pair multiplicity — so it is not re-queued).
-    # Rule 2 (net-new): ZERO.
-    # Then the two r12 pulls (flagship_catalog, raster_clip_pipeline)
-    # and 25 of the remaining 29 r12 rows, complex first. The four
-    # SIMPLEST r12 rows (scalar_epoch_roundtrip, scalar_part_composite,
-    # scalar_event_composite — 0-shuffle scalar projections — and
-    # filter_spatial_bbox, a pushdown-only filter) roll to the r18
-    # front, still inside the 6-round SLA (r12 breaches only after
-    # r18).
-    # -- r11 SLA heads (13) --
-    "dedup_exact_hash",
-    "dedup_span_exact",
-    "dedup_primary_key",
-    "sample_train_test_split",
-    "sample_balanced_downsample",
-    "sample_deterministic",
-    "join_dim_enrich",
-    "join_fanout_1n",
-    "geo_point_in_polygon",
-    "agg_approx_distinct",
-    "filter_membership_array",
-    "text_edit_distance",
-    "vector_norms",
-    # -- rule-1: r17-touched kernels (10) --
-    "similarity_ivf_pq",
-    "similarity_pq_adc",
-    "text_tfidf_top_terms",
-    "text_rake_keyphrases",
-    "corpus_token_budget_split",
-    "graph_bfs_distance",
-    "graph_triangle_count",
-    "graph_clustering_coefficient",
-    "dedup_containment",
-    "dedup_ngram_jaccard",
-    # -- r12 pulls (pre-planned) --
-    "flagship_catalog",
-    "raster_clip_pipeline",
-    # -- r12 tier (25 of 29), complex first --
-    "agg_core_composite",
-    "scd2_event_state",
-    "window_session",
-    "dedup_incremental_minhash",
-    "geo_polygon_union_exact",
-    "geo_polygon_union_bbox",
-    "corpus_chunk_documents",
-    "corpus_contamination_flag",
-    "corpus_quality_filter",
-    "jdbc_scan",
-    "sink_artifact_manifest",
-    "sql_api_shipping_priority",
-    "multimodal_binaryfile_scan",
-    "text_redact_pii",
-    "text_lang_id",
-    "text_profile",
-    "text_quality_score",
-    "text_repetition_score",
-    "text_fingerprint",
-    "text_normalize",
-    "text_tokenize_count",
-    "vector_centroid_cosine",
-    "incremental_new_keys",
-    "join_semi_anti",
-    "filter_pixel_predicates",
-    # ---- r17 first 50 end here. R18 PRE-PLAN (written now so the
-    # next builder doesn't re-derive it): slots 1-4 MUST be the four
-    # rolled r12 rows (scalar_epoch_roundtrip, scalar_part_composite,
-    # scalar_event_composite, filter_spatial_bbox — they breach the
-    # 6-round SLA after r18); then the r13 tier (46 rows, due r19, landing early),
-    # complex kernels first (analytics_market_basket,
-    # profile_table_stats, stats_robust_anomaly, the multimodal
-    # augment family, corpus_vocab_topk, the dedup signature family),
-    # as rule-1 influx allows — rule-1/rule-2 rows displace from the
-    # BACK (the r13 tail), never the two r12 SLA heads. Net-new stays
-    # zero unless a verdict item forces it. Validate any edit with
-    # `python tools/rotation_audit.py`.
-    "scalar_epoch_roundtrip",
-    "scalar_part_composite",
-    "scalar_event_composite",
-    "filter_spatial_bbox",
+#: no green entry goes more than this many driver rounds without a
+#: correctness row (``CORRECTNESS_r{N}.json``)
+SLA_ROUNDS = 6
 
-    # ================= r16 driver window (50 slots) ================
-    # REWRITTEN during the r16 OPTIMIZATION round: the round changed
-    # 34 additional kernels beyond the pre-planned rule-1 trio
-    # (per-operator shuffle/pass removal — see OPTIMIZATION_r16.md;
-    # every change oracle-verified locally with tools/compare.py,
-    # all outputs hash-identical), and rule 1 (changed kernel ⇒
-    # driver re-verifies) outranks the opportunistic parts of the
-    # pre-plan. Composition now: rule-1 37 + r11 SLA keeps 13.
-    # Rule 1 (changed kernel), 37 rows — the inherited trio
-    #   (dq_knn_recall_eval distributed exact side + the envelope
-    #   ceil, VERDICT r15 item 3 / ADVICE r15) plus every r16
-    #   optimization consumer: the IVF family (ivf_assign now emits
-    #   qv/nrm from the kernel instead of a re-attach join), the PQ
-    #   pair (one-aggregation codebook training), the dedup/eval
-    #   family (persisted shingle/pair tables, minhash_pairs sh
-    #   param), the iterative graph kernels (lazy invariants,
-    #   convergence-check cuts), markov (lazy rounds + broadcast
-    #   count anchor), bpe (eager argmax cut), raster stats
-    #   (persisted stack), and the five streaming drains
-    #   (STREAM_STATE_PARTITIONS 8 → 4).
-    # Rule 2 (net-new): ZERO (VERDICT r15 item 5 holds).
-    # Displaced to the r17 head (rule-1 displaces from the BACK —
-    # here the simple untouched r11 rows and the two untouched r12
-    # pulls): 13 r11 rows listed immediately after slot 50 below.
-    # They are exactly at the SLA bound at r17 (6 rounds stale) and
-    # MUST lead the r17 window; tools/rotation_audit.py re-run after
-    # this edit: ok=true (the displaced rows are due r17, so they
-    # gate r17's window, not r16's).
-    "dq_knn_recall_eval",
-    "similarity_knn_graph",
-    "dq_knn_recall_eval_sampled",
-    # -- r16 rule-1: IVF / PQ / ANN family --
-    "similarity_ivf_pq",
-    "similarity_ivf_probe",
-    "similarity_ivf_scaled",
-    "similarity_ivf_autocells",
-    "similarity_ann_filtered",
-    "similarity_ann_filtered_sparse",
-    "similarity_pq_adc",
-    "similarity_incremental_assign",
-    "dedup_semantic_cells",
-    "dq_ivf_balance_eval",
-    "dq_ann_recall_eval",
-    "dq_ann_recall_eval_sampled",
-    # -- r16 rule-1: dedup / corpus pipelines --
-    "dq_dedup_recall_eval",
-    "dq_dedup_recall_eval_sampled",
-    "dedup_minhash_lsh",
+#: entries whose kernels changed after their last driver row; they are
+#: re-checked ahead of the stalest tier. Drop a name once a round file
+#: newer than its change lists it.
+RECHECK = (
+    "raster_clip_pipeline",
+    "raster_stats_pipeline",
+    "raster_clip_vector_boundary",
+    "pipeline_image_records",
+    "stream_dedup_batch",
+    "multimodal_image_dedup",
     "dedup_cluster_assign",
     "dedup_canonical_keep",
     "sample_cluster_safe_split",
     "pipeline_corpus_dedup",
-    "dedup_embedding_cosine_lsh",
-    "dedup_fuzzy_blocked",
-    "corpus_bpe_learn",
-    "corpus_inverted_index",
-    # -- r16 rule-1: iterative graph / analytics --
-    "graph_pagerank",
-    "graph_shortest_path_weighted",
     "graph_components_star",
-    "graph_bfs_distance",
-    "analytics_markov_steady_state",
-    # -- r16 rule-1: raster + streaming drains --
-    "raster_stats_pipeline",
-    "stream_dedup_batch",
-    "stream_sessionize_batch",
-    "stream_window_batch",
-    "stream_stream_join_batch",
-    "stream_cdc_batch",
-    # -- r11 tier keeps (13, complex first; untouched kernels) --
-    "raster_clip_vector_boundary",
-    "pipeline_image_records",
-    "similarity_lsh_bucketed",
-    "similarity_topk_bruteforce",
-    "graph_triangle_count",
-    "graph_clustering_coefficient",
-    "skew_salted_join",
-    "join_asof",
-    "join_range_bucket",
-    "join_cross_configs",
-    "incremental_lookback",
-    "agg_tpch_q1",
-    "corpus_pack_sequences",
-    # ---- r16 first 50 end here. R17 PRE-PLAN (updated during the
-    # r16 optimization round): slots 1-13 MUST be the 13 displaced
-    # r11 rows just below (exactly at the 6-round SLA bound at r17);
-    # then the two untouched r12 pulls (flagship_catalog,
-    # raster_clip_pipeline) and the remaining r12 tier (due r18,
-    # landing early) as rule-1 influx allows; then r13 heads.
-    # Net-new stays zero unless a verdict item forces it. Validate
-    # any edit with tools/rotation_audit.py.
-    # -- displaced r11 rows (r17 window heads) --
-    "dedup_exact_hash",
-    "dedup_span_exact",
-    "dedup_primary_key",
-    "sample_train_test_split",
-    "sample_balanced_downsample",
-    "sample_deterministic",
-    "join_dim_enrich",
-    "join_fanout_1n",
-    "geo_point_in_polygon",
-    "agg_approx_distinct",
-    "filter_membership_array",
-    "text_edit_distance",
-    "vector_norms",
-    # -- displaced r12 pulls --
-    "flagship_catalog",
-    "raster_clip_pipeline",
-
-    # ================= r15 driver window (50 slots) ================
-    # Runs the pre-plan written at r14 (VERDICT r14 items 1/3/6).
-    # Rule 1 (changed kernel), 3 rows: _gram_int_exact's exactness-
-    #   envelope check moved from float64 to exact Python integer
-    #   arithmetic (ADVICE r14 — the f64 product could round down a
-    #   few ulps near 2^53 and admit a marginally-out-of-envelope
-    #   gram). The change can only REROUTE a boundary case from the
-    #   f64-BLAS path to the exact int64 fallback — both proven
-    #   bit-identical inside the envelope, and at fixture scale the
-    #   branch taken is unchanged (amax·bmax·d ≪ 2^53) — but changed
-    #   kernel ⇒ window per rule 1 for its three consumers:
-    #   similarity_knn_graph (cell_knn both directions),
-    #   dq_knn_recall_eval (exact_knn), dq_knn_recall_eval_sampled
-    #   (the mapInPandas candidate stream). The ANN evals do not call
-    #   the helper (grep-verified; their exact side is relational).
-    # Rule 2 (net-new), 1 row: dq_dedup_recall_eval_sampled (VERDICT
-    #   r14 item 3) — den pinned at the shared
-    #   EVAL_SAMPLE_DEN_REGISTERED, FULL DuckDB oracle from the
-    #   den-parameterized _sql_dedup_recall_oracle.
-    # NOT re-queued under rule 1 (adjudications, auditable):
-    #   (a) dq_dedup_recall_eval: its oracle moved into
-    #   _sql_dedup_recall_oracle(None) — BYTE-IDENTICAL to the r14
-    #   registered string (md5 30d07648af495d14045950cf328c8960
-    #   checked against a HEAD worktree at refactor time; all other
-    #   223 oracles md5-identical too) and the Spark body untouched;
-    #   (b) the caching.py per-file-OSError digest fix (ADVICE r14)
-    #   only BROADENS invalidation — it can force recomputes, never
-    #   serve different values (same adjudication as the r13 memo
-    #   hardening); (c) tools/scale_smoke.py's sampled-dedup gate
-    #   proxy fix (ADVICE r14) is tooling, not a kernel.
-    # Slots 5-6 = topk_global + set_union (r9, breach the 6-round
-    # SLA after r15 — must land this round). Slots 7-48 = the full
-    # 42-row r10 tier (due r16), complex kernels first. Slots 49-50
-    # = two r11-complex rows PULLED FORWARD (pipeline_corpus_dedup,
-    # analytics_markov_steady_state) to shave the r16 crunch.
-    "similarity_knn_graph",
-    "dq_knn_recall_eval",
-    "dq_knn_recall_eval_sampled",
-    "dq_dedup_recall_eval_sampled",
-    # -- r9 SLA heads --
-    "topk_global",
-    "set_union",
-    # -- r10 tier (all 42), complex first --
-    "geo_polygon_union_boundary",
-    "geo_union_boundary_hierarchical",
-    "graph_components_star",
-    "graph_shortest_path_weighted",
-    "dedup_fuzzy_blocked",
-    "corpus_inverted_index",
-    "text_pmi_collocations",
-    "text_rake_keyphrases",
-    "sample_contrastive_negatives",
-    "skew_null_safe_join",
-    "incremental_agg_merge",
-    "stats_cusum_drift",
-    "stats_ewma_trend",
-    "stats_mann_whitney",
-    "stats_chi2_independence",
-    "dq_reconcile_order_totals",
-    "dq_k_anonymity",
-    "analytics_attribution",
-    "analytics_attribution_linear",
-    "analytics_hhi_concentration",
-    "agg_weighted_median",
-    "agg_percentile_approx",
-    "agg_exact_corr",
-    "agg_pivot",
-    "window_analytics",
-    "window_tumbling",
-    "window_sliding",
-    "set_union_by_name",
-    "set_intersect",
-    "set_except_all",
-    "join_left_semi",
-    "scalar_string_keys",
-    "scalar_dates",
-    "scalar_math_extents",
-    "scalar_json_props",
-    "scalar_nested_arrays",
-    "scalar_map_regex",
-    "scalar_url_build",
-    "project_rename",
-    "filter_range_numeric",
-    "filter_temporal_interval",
-    "filter_metadata_threshold",
-    # -- r11-complex pulled forward --
-    "pipeline_corpus_dedup",
-    "analytics_markov_steady_state",
-    # ---- r15 first 50 end here.
-    # PRE-PLAN for the r16/r17 SLA crunch (VERDICT r14 item 6),
-    # written now so the next builder doesn't re-derive it. After
-    # r15 the tiers stand: r11 has 36 rows left (38 minus the two
-    # pulled forward), due at r17; r12 has 43 rows, due at r18; r13
-    # has 49, r14 has 50, r15 will have ~50.
-    #   r16 window: the 36 remaining r11 rows first (complex first:
-    #   raster/pipeline/stream/similarity/graph families, then
-    #   dedup/sample/join/agg, scalars last), then ~8-12 of the r12
-    #   tier's heaviest (flagship_catalog, raster_clip_pipeline,
-    #   similarity_ivf_pq + the other five IVF-family rows,
-    #   stream_stream_join_batch, graph_pagerank) as influx budget
-    #   allows — rule-1/rule-2 rows still displace from the BACK
-    #   (the r12 pulls), never from the r11 SLA rows.
-    #   r17 window: the remaining ~31-35 r12 rows (due r18, landing
-    #   a round early) + the r13 tier's heads as space allows; keep
-    #   net-new at zero in r16 unless a verdict item forces it —
-    #   the r13 tier (49 rows, due r19) needs r17+r18 headroom.
-    # Validate any window edit with `python tools/rotation_audit.py`
-    # (r15): it recomputes the staleness tiers from CORRECTNESS_r*
-    # and exits 1 if a would-breach or never-checked entry is missing
-    # from the front-50.
-    # ================= r14 driver window (50 slots) ================
-    # Runs the pre-plan written at r13 (VERDICT r13 item 3), with the
-    # round's rule-1/rule-2 influx resolved as follows:
-    # Rule 1 (changed kernel/oracle), 3 rows:
-    #   - dq_knn_recall_eval: exact-side rewrite (f64-BLAS
-    #     exactness-checked gram + argpartition id-stable top-k in
-    #     BOTH the one-group and the sampled mapInPandas paths, plus
-    #     the ADVICE broadcast of the sample matrix) — VERDICT r13
-    #     item 1; values bit-identical (oracle re-verified locally);
-    #   - similarity_knn_graph: the same gram/top-k rewrite inside
-    #     cell_knn (row AND column directions);
-    #   - dq_dedup_recall_eval: gained the eval_sample_den knob
-    #     (VERDICT r13 item 5; default-path values unchanged, but
-    #     changed kernel => window per rule 1).
-    # Rule 2 (net-new), 2 rows: dq_knn_recall_eval_sampled /
-    #   dq_ann_recall_eval_sampled (VERDICT r13 item 2) — the
-    #   100 TB-shape sampled evals as driver-hash-verified entries
-    #   with full oracles (the md5 predicate is SQL-expressible).
-    # NOT re-queued under rule 1 (adjudication, recorded here so the
-    # arithmetic is auditable): (a) the _bucket_expr literal-array
-    # construction moved from ~1,500 py4j F.lit calls to one F.expr
-    # parse — DRIVER-side construction only; plan_golden.json is
-    # byte-stable across the change (test_plan_regression green, no
-    # --write diff on any pre-existing entry) and the full-form
-    # oracles are byte-identical (md5-checked vs HEAD), so no IVF
-    # entry's values or plan can have moved; (b) the memo_per_path
-    # stat-key hardening (ADVICE r13) only BROADENS invalidation —
-    # it can force recomputes, never serve different values. Rule 1
-    # exists to re-verify value-bearing changes; both are
-    # value-neutral by construction and golden-gated.
-    # Slots 6-11 = the six rows displaced from r13 (the r8 five sit
-    # exactly AT the 6-round SLA boundary and go first, then
-    # corpus_bpe_apply). Slots 12-50 = 39 of the 41 remaining
-    # r9-stale rows, complex kernels first per the pre-plan; the two
-    # SIMPLEST (topk_global, set_union) roll to the r15 front, still
-    # inside the 6-round SLA (r9 breaches only after r15).
-    "dq_knn_recall_eval",
-    "dq_knn_recall_eval_sampled",
-    "dq_ann_recall_eval_sampled",
-    "similarity_knn_graph",
-    "dq_dedup_recall_eval",
-    # -- displaced-from-r13 (r8 five AT the SLA boundary first) --
-    "agg_percentiles",
-    "vector_quantize_int8",
-    "window_ema",
-    "window_gap_fill",
-    "window_rolling_range",
-    "corpus_bpe_apply",
-    # -- r9-stale re-confirmations (39 of 41), complex first --
-    "corpus_perplexity_buckets",
-    "stats_linear_regression",
-    "window_time_weighted_avg",
-    "sketch_loglog_set_ops",
-    "analytics_ab_ttest",
-    "join_asof_nearest",
-    "multimodal_audio_features",
-    "multimodal_image_features",
-    "multimodal_video_frames",
-    "analytics_rfm_segmentation",
-    "analytics_new_vs_returning",
-    "incremental_backfill_partitions",
-    "layout_compaction",
-    "corpus_token_budget_split",
-    "corpus_token_entropy",
-    "corpus_shard_manifest",
-    "dedup_prefix_boilerplate",
-    "dedup_url_canonical",
-    "dq_benford_first_digit",
-    "profile_dedup_summary",
-    "sample_pps_weighted",
-    "stats_covariance_topk",
-    "window_sliding_distinct",
-    "window_interpolate_linear",
-    "window_ohlc_bars",
-    "window_activity_streaks",
-    "agg_monthly_growth",
-    "agg_gini_inequality",
-    "agg_cube",
-    "agg_rollup",
-    "agg_stats_moments",
-    "agg_collect_array",
-    "agg_conditional_fraction",
-    "agg_filtered_mean",
-    "agg_distinct_count",
-    "join_left_anti",
-    "scalar_stable_ids",
-    "vector_standardize",
-    "topk_per_group",
-    # ---- r14 first 50 end here; r15 front: topk_global, set_union,
-    # then the r10 tier (42 rows, due r16) complex-first ------------
-
-    # ================= r13 driver window (50 slots) ================
-    # STANDING ROTATION POLICY (restated r13 — VERDICT r12 item 2):
-    #   1. any entry whose KERNEL or ORACLE changed since its last
-    #      driver row enters the next window, ahead of everything;
-    #   2. net-new entries next (first confirmation beats any
-    #      re-confirmation);
-    #   3. staleness SLA, rewritten at the ACHIEVABLE arithmetic:
-    #      222 entries / 50 slots with ~6-15 slots/round consumed by
-    #      changed+new kernels gives ~35-44 re-confirmations per
-    #      round, so a full cycle is 6 rounds (ceil(222/37)); the old
-    #      "4 rounds" text could never hold. New SLA: NO GREEN ENTRY
-    #      GOES MORE THAN 6 ROUNDS WITHOUT A DRIVER ROW, and net-new
-    #      registration PAUSES in any round whose stalest tier would
-    #      otherwise breach (a consolidation round — r13 is one: zero
-    #      net-new entries; the r13 sampled-eval work lands as knobs
-    #      on existing entries, not new names).
-    # Slots 1-10 = r13 changed kernels (rule 1 beats everything,
-    # including the r8 sweep): dq_knn_recall_eval (late-r12
-    # blocked-gram rewrite, golden regenerated this round — re-pin),
-    # dq_ann_recall_eval + dq_knn_recall_eval gained the sampled-eval
-    # knob (default full corpus: oracle values unchanged, but changed
-    # kernel ⇒ window per rule 1), dq_layout_skipping_eval (real-file
-    # footer-stats measurement added beside the proxy),
-    # graph_bfs_distance (frontier persist + early exit), plus the
-    # six construction-jobs migrations whose kernels changed
-    # (memo_per_path / bounded-persist — values proven oracle-
-    # identical locally, but changed kernel ⇒ window):
-    # dedup_simhash, dedup_ngram_jaccard, dedup_containment,
-    # dedup_semantic_cells, dedup_embedding_cosine,
-    # text_tfidf_top_terms. (The other four migrations were already
-    # in this window: dedup_sorted_neighborhood,
-    # multimodal_image_dedup, corpus_bloom_prefilter as r8-stale
-    # rows; analytics_market_basket as an r9 head.)
-    # Slots 11-50 = 40 rows: the 39 remaining r8-stale rows (the
-    # displaced-from-r12 four first, then complex kernels first)
-    # plus analytics_market_basket at the tail. The rule-1 influx
-    # displaced corpus_bpe_apply (the other r9 head) and the five
-    # SIMPLEST r8-tail rows (agg_percentiles, vector_quantize_int8,
-    # window_ema, window_gap_fill, window_rolling_range) to the FRONT
-    # of r14 — confirmed there they sit exactly AT the 6-round SLA
-    # boundary (r8 → r14), not past it.
-    # R14 PRE-PLAN (VERDICT r12 item 8): r14 takes its changed
-    # kernels, then the six rows displaced above (agg_percentiles,
-    # vector_quantize_int8, window_ema, window_gap_fill,
-    # window_rolling_range, corpus_bpe_apply — the r8 five are AT
-    # the SLA boundary and go first), then the 44 r9-stale rows —
-    # complex kernels first:
-    # analytics_market_basket is already confirmed here, so lead with
-    # corpus_perplexity_buckets, stats_linear_regression,
-    # window_time_weighted_avg, sketch_loglog_set_ops,
-    # analytics_ab_ttest, join_asof_nearest, multimodal_*_features,
-    # then the agg_*/window_* tail; overflow rolls to r15 inside the
-    # 6-round SLA (r9 rows breach only after r15).
-    "dq_knn_recall_eval",
-    "dq_ann_recall_eval",
-    "dq_layout_skipping_eval",
-    "graph_bfs_distance",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_semantic_cells",
-    "dedup_embedding_cosine",
-    "text_tfidf_top_terms",
-    # -- r8-stale re-confirmations (39 of 44; 5 simplest -> r14) --
-    "multimodal_image_dedup",
-    "cdc_apply_changelog",
-    "pipeline_training_prep",
-    "layout_zorder",
-    "stats_robust_anomaly",
-    "text_wordpiece_tokenize",
-    "text_bigram_lm_score",
-    "text_quality_classifier",
-    "text_gopher_rules",
-    "text_url_canonicalize",
-    "dedup_sorted_neighborhood",
-    "corpus_contamination_pairs",
-    "corpus_bloom_prefilter",
-    "corpus_global_shuffle",
-    "corpus_mix_weighted",
-    "corpus_vocab_topk",
-    "multimodal_audio_augment",
-    "multimodal_audio_vad",
-    "multimodal_image_augment",
-    "multimodal_image_tiles",
-    "multimodal_video_augment",
-    "multimodal_video_shots",
-    "sketch_count_min",
-    "sketch_distinct_loglog",
-    "stats_ks_drift",
-    "stats_equidepth_histogram",
-    "stats_histogram",
-    "snapshot_diff",
-    "dq_check_rules",
-    "profile_table_stats",
-    "sample_stratified_exact",
-    "join_interval_overlap",
-    "join_point_in_time",
-    "analytics_cohort_retention",
-    "analytics_event_transitions",
-    "analytics_window_funnel",
-    "agg_abc_pareto",
-    "agg_grouping_sets",
-    "agg_mode",
-    # (agg_percentiles, vector_quantize_int8, window_ema,
-    #  window_gap_fill, window_rolling_range, corpus_bpe_apply:
-    #  displaced to the r14 front by the rule-1 influx above)
-    "analytics_market_basket",
-    # ---- r13 first 50 end here ----------------------------------------
-
-    # ================= r12 driver window (50 slots) ================
-    # STANDING ROTATION POLICY (VERDICT r11 items 1+3):
-    #   1. any entry whose KERNEL or ORACLE changed since its last
-    #      driver row enters the next window, ahead of everything;
-    #   2. net-new entries next (first confirmation beats any
-    #      re-confirmation);
-    #   3. then a staleness SLA: NO GREEN ENTRY GOES MORE THAN 4
-    #      ROUNDS WITHOUT A DRIVER ROW — fill the remaining slots
-    #      with the stalest still-green rows, complex kernels first.
-    # Slots 1-14 = r12 changes: the net-new low-selectivity filtered
-    # ANN and the four net-new eval harnesses (ANN recall, IVF
-    # balance, kNN-graph recall, layout skipping); the symmetrized
-    # kNN graph (kernel+oracle); the degenerate-corpus-guarded dedup
-    # recall eval (kernel+oracle); and the IVF family, whose
-    # construction path changed (codebook memo + persist swap —
-    # values unchanged, but changed kernel ⇒ next window per policy).
-    # Slots 15-45 = all 31 r7-stale rows (4 windows old — the SLA
-    # boundary). Slots 46-50 = the first 5 of the r8 tier, complex
-    # kernels first; r13 takes the rest of r8 (from
-    # multimodal_image_dedup, which this window's net-new additions
-    # displaced) plus the r9 heads.
-    "similarity_ann_filtered_sparse",
-    "dq_ann_recall_eval",
-    "dq_ivf_balance_eval",
-    "dq_knn_recall_eval",
-    "dq_layout_skipping_eval",
-    "similarity_knn_graph",
-    "dq_dedup_recall_eval",
-    "similarity_ivf_probe",
-    "similarity_ivf_scaled",
-    "similarity_ivf_autocells",
-    "similarity_ivf_pq",
-    "similarity_ann_filtered",
-    "similarity_incremental_assign",
-    "dedup_semantic_cells",
-    # -- r7-stale re-confirmations (31; the SLA boundary) --
-    "flagship_catalog",
-    "jdbc_scan",
     "sink_artifact_manifest",
-    "scd2_event_state",
-    "raster_clip_pipeline",
-    "multimodal_binaryfile_scan",
-    "geo_polygon_union_exact",
-    "geo_polygon_union_bbox",
-    "sql_api_shipping_priority",
-    "window_session",
-    "text_tfidf_top_terms",
-    "text_redact_pii",
-    "text_repetition_score",
-    "text_quality_score",
-    "text_profile",
-    "text_normalize",
-    "text_lang_id",
-    "text_tokenize_count",
-    "text_fingerprint",
-    "corpus_chunk_documents",
-    "corpus_contamination_flag",
-    "corpus_quality_filter",
-    "vector_centroid_cosine",
-    "scalar_event_composite",
-    "scalar_part_composite",
-    "scalar_epoch_roundtrip",
-    "agg_core_composite",
-    "filter_pixel_predicates",
-    "filter_spatial_bbox",
-    "incremental_new_keys",
-    "join_semi_anti",
-    # -- r8 tier heads. NOTE (ADVICE r12): 9 names follow, so 54
-    # names sit before this block's end marker — the driver's 50-cap
-    # took only the first 5 (graph_pagerank..corpus_bpe_learn,
-    # confirmed in CORRECTNESS_r12); the last 4 were PRE-STAGED
-    # overflow and now lead the r13 window above. --
-    "graph_pagerank",
-    "stream_cdc_batch",
-    "stream_stream_join_batch",
-    "dedup_incremental_minhash",
-    "corpus_bpe_learn",
-    "multimodal_image_dedup",
-    "cdc_apply_changelog",
-    "pipeline_training_prep",
-    "layout_zorder",
-    # ---- r12 first 50 end here ----------------------------------------
-
-    # ================= r11 driver window (50 slots) ================
-    # Rotation policy (VERDICT r10 item 3, now standing): any entry
-    # whose KERNEL or ORACLE changed since its last driver row enters
-    # the next window, ahead of everything else. Slots 1-9 = r11
-    # changes (the net-new U3×U7 vector-clip bridge and filtered-ANN
-    # entries; derived-geometry kNN graph + memoized autocells; the
-    # tolerance-embedded HLL oracle; fixed-point thumbnail moments;
-    # the PQ entries whose persist path changed; markov, whose r10
-    # DECIMAL widening landed after its last driver row — the
-    # judge's item 3). Then the stalest still-green rows (r3/r5/r6),
-    # then r7 rows, complex kernels first.
-    "raster_clip_vector_boundary",
-    "similarity_ann_filtered",
-    "similarity_incremental_assign",
-    "dedup_canonical_keep",
-    "dq_dedup_recall_eval",
-    "sample_cluster_safe_split",
-    "similarity_knn_graph",
-    "similarity_ivf_autocells",
-    "agg_approx_distinct",
-    "raster_stats_pipeline",
-    "analytics_markov_steady_state",
-    "similarity_pq_adc",
-    "similarity_ivf_pq",
-    "similarity_ivf_scaled",
-    "graph_triangle_count",
-    "graph_clustering_coefficient",
-    # -- stalest re-confirmations: r3 (4) --
-    "agg_tpch_q1",
-    "filter_membership_array",
-    "join_cross_configs",
-    "join_dim_enrich",
-    # -- r5 (7) --
-    "geo_point_in_polygon",
-    "sample_balanced_downsample",
-    "sample_deterministic",
-    "sample_train_test_split",
-    "skew_salted_join",
-    "text_edit_distance",
-    "vector_norms",
-    # -- r6 (6) --
-    "corpus_pack_sequences",
-    "dedup_cluster_assign",
-    "incremental_lookback",
-    "join_asof",
-    "join_fanout_1n",
-    "join_range_bucket",
-    # -- r7 (25 of 48; complex kernels first) --
-    "pipeline_corpus_dedup",
-    "pipeline_image_records",
-    "dedup_minhash_lsh",
-    "dedup_embedding_cosine",
-    "dedup_embedding_cosine_lsh",
-    "dedup_semantic_cells",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_exact_hash",
-    "dedup_span_exact",
-    "dedup_primary_key",
-    "similarity_ivf_probe",
-    "similarity_lsh_bucketed",
-    "similarity_topk_bruteforce",
-    "stream_dedup_batch",
-    "stream_sessionize_batch",
-    "stream_window_batch",
-    # ---- r11 first 50 end here ----------------------------------------
-    "geo_polygon_union_exact",
-    "jdbc_scan",
-    # (flagship_catalog displaced by the two changed graph kernels —
-    # the flagship plan is smoke-checked every round via entry())
-    "flagship_catalog",
-    "agg_core_composite",
-    "corpus_chunk_documents",
-    "corpus_contamination_flag",
-    "corpus_quality_filter",
-    "scd2_event_state",
-
-    # ================= r10 driver window (50 slots) ================
-    # Slots 1-6: entries whose kernels or oracles CHANGED in r10 (the
-    # lazy salted-cogroup PQ assignment; multi-probe blocked-gram kNN
-    # graph; the new derived-geometry IVF entry; the
-    # tolerance-embedded GK-percentile oracle; the thumbnail
-    # pixel-moment oracle). Slots 7-31: the twenty-five NET-NEW r10
-    # entries (no driver row exists yet — first confirmation beats any
-    # re-confirmation). Remaining slots: the stalest still-green
-    # driver rows (r2/r3), re-confirmed — every entry displaced below
-    # the line is r5+/r6+ green with an unchanged kernel.
-    "similarity_pq_adc",
-    "similarity_ivf_pq",
-    "similarity_knn_graph",
-    "similarity_ivf_autocells",
-    "agg_percentile_approx",
-    "raster_stats_pipeline",
-    # -- net-new r10 entries (exact union boundary kernel; star-
-    #    contraction components sharing dedup_cluster_assign's oracle;
-    #    degree-oriented triangle counting; PMI collocations; last-touch
-    #    attribution; chi-squared independence) --
-    "geo_polygon_union_boundary",
-    "geo_union_boundary_hierarchical",
-    "graph_components_star",
-    "graph_triangle_count",
-    "text_pmi_collocations",
-    "analytics_attribution",
-    "stats_chi2_independence",
-    # -- second net-new r10 block (level-synchronous BFS; exact banded
-    #    weighted median; mergeable-view maintenance; blocked fuzzy
-    #    entity resolution) --
-    "graph_bfs_distance",
-    "agg_weighted_median",
-    "incremental_agg_merge",
-    "dedup_fuzzy_blocked",
-    "stats_mann_whitney",
-    "sample_contrastive_negatives",
-    "text_rake_keyphrases",
-    "graph_shortest_path_weighted",
-    "dq_reconcile_order_totals",
-    "dq_k_anonymity",
-    "skew_null_safe_join",
-    "corpus_inverted_index",
-    "graph_clustering_coefficient",
-    "analytics_hhi_concentration",
-    "stats_cusum_drift",
-    "analytics_attribution_linear",
-    "stats_ewma_trend",
-    # -- stalest re-confirmations: r2 rows (16) --
-    "set_intersect",
-    "set_except_all",
-    "window_tumbling",
-    "window_sliding",
-    "scalar_string_keys",
-    "scalar_dates",
-    "scalar_math_extents",
-    "scalar_json_props",
-    "scalar_nested_arrays",
-    "scalar_map_regex",
-    "scalar_url_build",
-    "join_left_semi",
-    "agg_exact_corr",
-    "agg_pivot",
-    "set_union_by_name",
-    "window_analytics",
-    # -- r3 rows (8) --
-    "project_rename",
-    "filter_range_numeric",
-    "filter_temporal_interval",
-    "filter_metadata_threshold",
-    # ---- r10 first 50 end here ----------------------------------------
-    "filter_membership_array",
-    "join_dim_enrich",
-    "join_cross_configs",
-    "agg_tpch_q1",
-    "text_edit_distance",
-    # (all r5/r6 re-confirmation slots below were displaced out of the
-    # window by the twenty-five net-new entries above — every displaced
-    # name is r5/r6/r7-green with an unchanged kernel, so the window
-    # trades redundant re-confirmations for first driver rows)
-    "vector_norms",
-    "geo_point_in_polygon",
-    "sample_deterministic",
-    "sample_train_test_split",
-    "sample_balanced_downsample",
-    "join_fanout_1n",
-    "join_asof",
-    "join_range_bucket",
-    "incremental_lookback",
-    "dedup_cluster_assign",
-    "corpus_pack_sequences",
-    "flagship_catalog",
-    "filter_spatial_bbox",
-    "filter_pixel_predicates",
-    "incremental_new_keys",
-    "dedup_primary_key",
-    "window_session",
-    "scalar_epoch_roundtrip",
-
-    # ================= r9 driver window (kept for history; _ordered
-    # is first-occurrence-wins, so names above keep their new slots =
-    # VERDICT r8 item 1: finish the rotation. Slots 1-35 = every entry
-    # that has NEVER had a driver CORRECTNESS row (the late-r7/late-r8
-    # registration tail; all green in the local parametrized oracle
-    # gate). Slots 36-39 = the 4 entries whose kernels changed in r8
-    # but whose driver rows predate the change (bicubic thumbnail,
-    # batched multimodal feature kernels). Slots 40-50 = the stalest
-    # still-green rows (r2) for re-confirmation. After this round every
-    # registry entry has a driver CORRECTNESS row from some round.
-
-    # -- never driver-confirmed (35) --
-    "corpus_token_entropy",
-    "vector_standardize",
-    "window_sliding_distinct",
-    "join_asof_nearest",
-    "stats_covariance_topk",
-    "corpus_perplexity_buckets",
-    "analytics_ab_ttest",
-    "agg_percentile_approx",
-    "dedup_url_canonical",
-    "stats_linear_regression",
-    "window_ohlc_bars",
-    "sketch_loglog_set_ops",
-    "analytics_markov_steady_state",
-    "profile_dedup_summary",
-    "agg_monthly_growth",
-    "window_activity_streaks",
-    "scalar_stable_ids",
-    "dedup_prefix_boilerplate",
-    "agg_gini_inequality",
-    "corpus_shard_manifest",
-    "analytics_new_vs_returning",
-    "corpus_token_budget_split",
-    "similarity_ivf_scaled",
-    "similarity_ivf_pq",
-    "dedup_containment",
-    "incremental_backfill_partitions",
-    "corpus_bpe_apply",
-    "sample_pps_weighted",
-    "layout_compaction",
-    "window_time_weighted_avg",
-    "similarity_knn_graph",
-    "analytics_market_basket",
-    "dq_benford_first_digit",
-    "analytics_rfm_segmentation",
-    "window_interpolate_linear",
-    # -- r8-changed kernels whose driver rows predate the change (4) --
-    "raster_stats_pipeline",
-    "multimodal_image_features",
-    "multimodal_audio_features",
-    "multimodal_video_frames",
-    # -- stalest re-confirmations (r2 rows, 11) --
-    "join_left_anti",
-    "agg_collect_array",
-    "agg_filtered_mean",
-    "agg_conditional_fraction",
-    "agg_distinct_count",
-    "agg_rollup",
-    "agg_cube",
-    "agg_stats_moments",
-    "topk_global",
-    "topk_per_group",
-    "set_union",
-    # ---- first 50 end here -------------------------------------------
-    # Previously driver-confirmed entries, rotated out (green in
-    # r1-r8 windows and in the local gate; kernels unchanged):
-
-    "similarity_pq_adc",
-    "pipeline_training_prep",
-    "stream_stream_join_batch",
-    "stream_cdc_batch",
-    "corpus_bpe_learn",
-    "graph_pagerank",
-    "dedup_sorted_neighborhood",
-    "stats_robust_anomaly",
-    "sketch_distinct_loglog",
-    "text_wordpiece_tokenize",
-    "join_point_in_time",
-    "join_interval_overlap",
-    "corpus_bloom_prefilter",
-    "multimodal_image_dedup",
-    "multimodal_image_tiles",
-    "multimodal_image_augment",
-    "multimodal_audio_vad",
-    "multimodal_audio_augment",
-    "multimodal_video_shots",
-    "multimodal_video_augment",
-    "corpus_vocab_topk",
-    "corpus_mix_weighted",
-    "agg_grouping_sets",
-    "analytics_window_funnel",
-    "analytics_cohort_retention",
-    "agg_percentiles",
-    "stats_histogram",
-    "cdc_apply_changelog",
-    "window_gap_fill",
-    "sample_stratified_exact",
-    "profile_table_stats",
-    "layout_zorder",
-    "text_quality_classifier",
-    "text_bigram_lm_score",
-    "analytics_event_transitions",
-    "sketch_count_min",
-    "window_ema",
-    "vector_quantize_int8",
-    "agg_abc_pareto",
-    "window_rolling_range",
-    "text_url_canonicalize",
-    "agg_mode",
-    "dq_check_rules",
-    "dedup_incremental_minhash",
-    "snapshot_diff",
-    "text_gopher_rules",
-    "corpus_global_shuffle",
-    "corpus_contamination_pairs",
-    "stats_equidepth_histogram",
-    "stats_ks_drift",
-    "flagship_catalog",
-    "dedup_exact_hash",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_span_exact",
-    "dedup_embedding_cosine",
-    "similarity_topk_bruteforce",
-    "similarity_ivf_probe",
-    "similarity_lsh_bucketed",
-    "dedup_semantic_cells",
-    "text_profile",
-    "text_tfidf_top_terms",
-    "text_tokenize_count",
-    "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "text_normalize",
-    "vector_centroid_cosine",
-    "geo_polygon_union_bbox",
-    "geo_polygon_union_exact",
-    "scalar_epoch_roundtrip",
-    "multimodal_binaryfile_scan",
-    "window_session",
-    "jdbc_scan",
-    "stream_dedup_batch",
-    "raster_clip_pipeline",
-    "pipeline_image_records",
-    "sql_api_shipping_priority",
-    "scalar_event_composite",
-    "scalar_part_composite",
-    "filter_spatial_bbox",
-    "filter_pixel_predicates",
-    "join_semi_anti",
-    "dedup_primary_key",
-    "sink_artifact_manifest",
-    "incremental_new_keys",
-    "agg_core_composite",
-    "dedup_embedding_cosine_lsh",
-    "pipeline_corpus_dedup",
-    "corpus_quality_filter",
-    "corpus_contamination_flag",
-    "stream_sessionize_batch",
-    "corpus_chunk_documents",
-    "scd2_event_state",
-    "text_repetition_score",
-    "stream_window_batch",
-    "text_redact_pii",
-    "join_fanout_1n",
-    "join_asof",
-    "join_range_bucket",
-    "incremental_lookback",
-    "corpus_pack_sequences",
-    "dedup_cluster_assign",
-    "skew_salted_join",
-    "text_edit_distance",
-    "vector_norms",
-    "geo_point_in_polygon",
-    "sample_deterministic",
-    "sample_train_test_split",
-    "sample_balanced_downsample",
-    "project_rename",
-    "filter_range_numeric",
-    "filter_temporal_interval",
-    "filter_metadata_threshold",
-    "filter_membership_array",
-    "join_dim_enrich",
-    "join_cross_configs",
-    "agg_tpch_q1",
-    "agg_pivot",
-    "agg_exact_corr",
-    "agg_approx_distinct",
-    "set_intersect",
-    "set_except_all",
-    "set_union_by_name",
-    "window_tumbling",
-    "window_sliding",
-    "window_analytics",
-    "join_left_semi",
-    "scalar_string_keys",
-    "scalar_dates",
-    "scalar_math_extents",
-    "scalar_json_props",
-    "scalar_map_regex",
-    "scalar_url_build",
-    "scalar_nested_arrays",
 )
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def _ordered(d: dict) -> dict:
-    # first occurrence wins, so a name listed in the current driver
-    # window AND in an older window below keeps its window slot
-    rank: dict[str, int] = {}
-    for i, name in enumerate(_PRIORITY):
-        rank.setdefault(name, i)
-    n = len(_PRIORITY)
-    order = {name: rank.get(name, n + i) for i, name in enumerate(d)}
-    return dict(sorted(d.items(), key=lambda kv: order[kv[0]]))
+
+def load_latest_rounds(root: str = _REPO_ROOT) -> dict[str, int]:
+    """Map each entry to the newest round N whose
+    ``root/CORRECTNESS_r{N}.json`` lists it. Unreadable files are
+    skipped; no files gives ``{}``."""
+    latest: dict[str, int] = {}
+    for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
+        try:
+            with open(f) as fh:
+                rows = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        for k in rows:
+            latest[k] = max(latest.get(k, 0), rnd)
+    return latest
+
+
+def rotation_order(
+    names: list[str], latest: dict[str, int], recheck: tuple[str, ...]
+) -> list[str]:
+    """Order ``names`` (registration order) for the correctness gate.
+
+    Groups, in order: never-checked entries; entries at the SLA edge
+    (``latest <= next_round - SLA_ROUNDS``, ``next_round`` one past the
+    newest round seen), which breach the SLA if the next round skips
+    them; ``recheck``; the rest. Within a group the stalest come first,
+    ties in registration order. An empty ``latest`` makes every entry
+    never-checked, so the result is registration order.
+    """
+    edge = max(latest.values(), default=0) + 1 - SLA_ROUNDS
+
+    def key(item: tuple[int, str]) -> tuple[int, int, int]:
+        i, name = item
+        group = (
+            0 if name not in latest
+            else 1 if latest[name] <= edge
+            else 2 if name in recheck
+            else 3
+        )
+        return group, latest.get(name, 0), i
+
+    return [name for _, name in sorted(enumerate(names), key=key)]
 
 
 def load_all() -> tuple[dict[str, QueryFn], dict[str, str]]:
@@ -1078,4 +151,8 @@ def load_all() -> tuple[dict[str, QueryFn], dict[str, str]]:
             # queries from the driver contract.
             if not (e.name == mod or mod.startswith(e.name + ".")):
                 raise
-    return _ordered(QUERIES), _ordered(ORACLES)
+    order = rotation_order(list(QUERIES), load_latest_rounds(), RECHECK)
+    return (
+        {n: QUERIES[n] for n in order},
+        {n: ORACLES[n] for n in order if n in ORACLES},
+    )

@@ -170,8 +170,8 @@ def test_budget_degrades_min_of_2_before_dropping_names(bench_env, capsys):
     fake = FakeChildren(clock, timings, [9.0, 5.0, 0.5])  # warm spread 10x
     monkeypatch.setattr(bench.subprocess, "run", fake)
     # elapsed at iso start = 2 cal + 1 batch = 50, so the r17
-    # phase-anchored budget is max(175-50, floor≈94) = 125; each iso
-    # child costs 20 on the clock, est = 10 + batched-time ≈ 12-14
+    # phase-anchored budget is max(175-50, floor≈124.5) = 125; each iso
+    # child costs 20 on the clock, est = 15 + 2·batched-time ≈ 19-23
     monkeypatch.setenv("SPARK_GRAFT_BENCH_BUDGET_SEC", "175")
     bench.main()
     final = _summaries(capsys.readouterr().out)[-1]
@@ -192,12 +192,12 @@ def test_budget_skipping_rep1_cancels_rep2_entirely(bench_env, capsys):
     than one sample of all) — and the dropped tail is the LEAST-slow
     names, because the slowest run first. The r17 floor guarantees
     the slowest-10 rep-1 fits AT ESTIMATE (1.5× margin); here each
-    isolated child overruns its ~14-18s estimate ~3×, so the floor
-    (~94s) still cuts rep 1 after two names — the degradation path
+    isolated child overruns its ~19-23s estimate ~3×, so the floor
+    (~124.5s) still cuts rep 1 after two names — the degradation path
     survives real overruns."""
     names, timings, clock, monkeypatch, tmp_path = bench_env
     fake = FakeChildren(clock, timings, [9.0, 5.0, 0.5])
-    fake.costs["iso"] = 45.0
+    fake.costs["iso"] = 60.0
     monkeypatch.setattr(bench.subprocess, "run", fake)
     monkeypatch.setenv("SPARK_GRAFT_BENCH_BUDGET_SEC", "100")
     bench.main()

@@ -544,3 +544,33 @@ def test_persist_registry_collision_unpersists_old(spark, monkeypatch):
     C.persist_bounded(df_b2)
     assert df_b.storageLevel.useMemory, "shared cache entry was yanked"
     C.release_all()
+
+
+def test_literal_frames_are_local_relations(spark):
+    """io.local_frame gives the same schema and rows as
+    createDataFrame(list), empty input included, but plans as a
+    LocalTableScan, so no Python worker task starts; the literal config
+    tables and the artifact manifest are built with it."""
+    from lake_satellite_image_etl_spark.io import local_frame
+    from lake_satellite_image_etl_spark.operators.joins import (
+        join_cross_configs,
+    )
+    from lake_satellite_image_etl_spark.plans.ingest_entries import (
+        sink_artifact_manifest,
+    )
+    from lake_satellite_image_etl_spark.plans.pipeline import (
+        pipeline_image_records,
+    )
+
+    ddl = "key string, n_bytes bigint, w double"
+    for rows in ([("a", 3, 0.5), ("b", None, -1.0)], []):
+        got = local_frame(spark, rows, ddl)
+        ref = spark.createDataFrame(rows, ddl)
+        assert got.schema == ref.schema
+        assert sorted(got.collect()) == sorted(ref.collect())
+        plan = _plan(got)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    for fn in (join_cross_configs, pipeline_image_records,
+               sink_artifact_manifest):
+        assert "ExistingRDD" not in _plan(fn(spark, SF_SMOKE)), fn.__name__

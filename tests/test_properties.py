@@ -293,20 +293,17 @@ def test_standardized_dimensions_have_zero_mean_unit_variance(spark):
     assert all(abs(r["zm"]) < 1e-9 and abs(r["zv"] - 1) < 1e-9 for r in z)
 
 
-def test_pdot_matches_hof_dot(spark):
-    """pdot_long (Arrow numpy einsum) must be bit-identical to
-    dot_long (Catalyst zip_with+aggregate fold) — ivf_assign's
-    affinity matrix relies on swapping one for the other without
-    moving a single oracle hash. Includes negatives and
-    centroid-scale magnitudes (sums of ~10^4-quantized components)."""
+def test_dot_long_matches_numpy_einsum(spark):
+    """dot_long (Catalyst zip_with+aggregate fold) must be bit-identical
+    to an int64 numpy einsum of the same rows — ivf_assign ranks with
+    one int64 numpy matmul in place of dot_long without moving a single
+    oracle hash. Includes negatives and centroid-scale magnitudes (sums
+    of ~10^4-quantized components)."""
     import random
 
     from pyspark.sql import functions as F
 
-    from lake_satellite_image_etl_spark.functions.vectors import (
-        dot_long,
-        pdot_long,
-    )
+    from lake_satellite_image_etl_spark.functions.vectors import dot_long
 
     rng = random.Random(11)
     rows = [
@@ -320,13 +317,13 @@ def test_pdot_matches_hof_dot(spark):
     df = spark.createDataFrame(
         rows, "id long, a array<long>, b array<long>"
     )
-    bad = (
-        df.select(
-            "id",
-            dot_long(F.col("a"), F.col("b")).alias("hof"),
-            pdot_long(F.col("a"), F.col("b")).alias("npy"),
-        )
-        .filter(F.col("hof") != F.col("npy"))
-        .count()
-    )
-    assert bad == 0
+    got = {
+        r["id"]: r["hof"]
+        for r in df.select(
+            "id", dot_long(F.col("a"), F.col("b")).alias("hof")
+        ).collect()
+    }
+    a = np.array([r[1] for r in rows], dtype=np.int64)
+    b = np.array([r[2] for r in rows], dtype=np.int64)
+    want = np.einsum("ij,ij->i", a, b)
+    assert [got[i] for i in range(len(rows))] == want.tolist()

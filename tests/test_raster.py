@@ -284,8 +284,6 @@ def test_fimg_roundtrip_and_features(spark):
     blob = im.encode_fimg(arr)
     back = im.decode_fimg(blob)
     assert np.array_equal(arr, back)
-    with pytest.raises(NotImplementedError):
-        im.decode_standard_image(b"\x89PNG....")
 
     feats = im.multimodal_image_features(spark, SF_SMOKE).collect()
     assert len(feats) == 51

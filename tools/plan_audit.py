@@ -212,7 +212,9 @@ def main() -> int:
         "| query | shuf | bc | BHJ | SMJ | push | arrow |",
         "|---|---|---|---|---|---|---|",
     ]
-    for r in rows:
+    # by name: the registry's order follows the correctness rounds, so
+    # it changes whenever a CORRECTNESS_r*.json file lands
+    for r in sorted(rows, key=lambda r: r["name"]):
         lines.append(
             f"| {r['name']} | {r['shuffles']} | {r['broadcasts']} | "
             f"{r['bhj']} | {r['smj']} | {'y' if r['pushed'] else ''} | "

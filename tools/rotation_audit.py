@@ -1,13 +1,14 @@
-"""Rotation-window audit — the staleness/SLA arithmetic the rotation
-policy (registry.py::_PRIORITY, standing policy restated r13) depends
-on, as a committed tool instead of a per-round hand derivation.
+"""Rotation-window audit: the staleness/SLA arithmetic behind the
+registry's derived check order (``registry.rotation_order``, fed by
+``registry.load_latest_rounds`` and ``registry.SLA_ROUNDS``), as a
+committed check.
 
 Reads CORRECTNESS_r*.json + the registry and reports:
 
 1. the staleness histogram (latest driver round per entry);
-2. entries never driver-checked (must be next window's rule-2 heads);
+2. entries never driver-checked (must lead the next window);
 3. SLA state: with ``--next-round N``, which entries would BREACH the
-   6-round SLA if NOT in round N's window (i.e. latest <= N - 6);
+   SLA if NOT in round N's window (i.e. latest < N - SLA_ROUNDS);
 4. window audit: whether the registry's front-50 (the driver's
    observed check cap) covers every would-breach entry and every
    entry of the oldest due tier, plus the window's tier composition.
@@ -24,52 +25,35 @@ missing from the window; 0 otherwise. Prints one JSON line.
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
-import re
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-#: the standing rotation policy's staleness bound (registry.py):
-#: no green entry goes more than this many rounds without a driver row
-SLA_ROUNDS = 6
+from lake_satellite_image_etl_spark.registry import (  # noqa: E402
+    SLA_ROUNDS,
+    load_all,
+    load_latest_rounds,
+)
 
 
-def load_latest_rounds() -> dict[str, int]:
-    latest: dict[str, int] = {}
-    for f in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
-        try:
-            with open(f) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for k in rows:
-            latest[k] = max(latest.get(k, 0), rnd)
-    return latest
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--next-round", type=int, default=None)
-    ap.add_argument("--window", type=int, default=50)
-    args = ap.parse_args()
-
-    from lake_satellite_image_etl_spark.registry import load_all
-
-    queries, oracles = load_all()
-    names = list(queries)
-    latest = load_latest_rounds()
+def audit(
+    names: list[str],
+    n_oracled: int,
+    latest: dict[str, int],
+    next_round: int | None = None,
+    window_size: int = 50,
+) -> dict:
+    """The report for ``names`` in check order, given each entry's
+    latest driver round."""
     max_round = max(latest.values(), default=0)
-    # `is not None`, not `or` (ADVICE r15): an explicit --next-round 0
-    # must audit round 0, not silently fall back to max_round + 1
-    next_round = (
-        args.next_round if args.next_round is not None else max_round + 1
-    )
+    # `is not None`, not `or`: an explicit next round 0 must audit
+    # round 0, not silently fall back to max_round + 1
+    if next_round is None:
+        next_round = max_round + 1
 
     hist: dict[int, int] = {}
     for n in names:
@@ -88,7 +72,7 @@ def main() -> int:
         n for n in names if latest.get(n) == oldest_round
     )
 
-    window = names[: args.window]
+    window = names[:window_size]
     wset = set(window)
     breach_missing = [n for n in would_breach if n not in wset]
     never_missing = [n for n in never if n not in wset]
@@ -98,9 +82,9 @@ def main() -> int:
         tier = f"r{latest[n]}" if n in latest else "never"
         comp[tier] = comp.get(tier, 0) + 1
 
-    report = {
+    return {
         "registered": len(names),
-        "oracled": len(oracles),
+        "oracled": n_oracled,
         "max_seen_round": max_round,
         "audited_next_round": next_round,
         "staleness_histogram": {
@@ -120,6 +104,22 @@ def main() -> int:
         "oldest_tier_missing_from_window": oldest_missing,
         "ok": not breach_missing and not never_missing,
     }
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--next-round", type=int, default=None)
+    ap.add_argument("--window", type=int, default=50)
+    args = ap.parse_args()
+
+    queries, oracles = load_all()
+    report = audit(
+        list(queries),
+        len(oracles),
+        load_latest_rounds(),
+        args.next_round,
+        args.window,
+    )
     print(json.dumps(report))
     return 0 if report["ok"] else 1
 
