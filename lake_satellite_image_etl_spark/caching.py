@@ -6,16 +6,15 @@ triangle kernel's ``oriented`` edge list was being rebuilt ~9× per
 run — wedge sides e1/e2/e3 × corners a/b/c). ``persist()`` is the
 right fix because it is plan-LAZY (zero Spark jobs at DataFrame
 construction — the zero-jobs sweep in tests/test_construction_jobs.py
-stays green; an eager localCheckpoint would materialize at plan time,
-the r9 leak class) and the CacheManager dedups identical plans.
+stays green; an eager localCheckpoint would materialize at plan time)
+and the CacheManager dedups identical plans.
 
-The registry bounds what a long-lived shared session can accumulate
-(ADVICE r10 on the PQ codebook): only the newest ``_MAX`` distinct
-PLANS stay persisted. Keying matters (ADVICE r11): Spark's
-CacheManager dedups identical canonicalized plans, so registering the
-same reconstructed query twice by insertion order would create two
-list slots pointing at ONE cache entry — evicting the "old" slot
-unpersists the shared entry out from under the "new" one. The
+The registry bounds what a long-lived shared session can accumulate:
+only the newest ``_MAX`` distinct PLANS stay persisted. Keying matters:
+Spark's CacheManager dedups identical canonicalized plans, so
+registering the same reconstructed query twice by insertion order
+would create two list slots pointing at ONE cache entry — evicting the
+"old" slot unpersists the shared entry out from under the "new" one. The
 registry is therefore keyed by ``(session, df.semanticHash())``
 (Spark's canonicalized-plan hash): re-registering an identical plan
 just refreshes its recency, and eviction only fires when no newer
@@ -34,15 +33,15 @@ _log = logging.getLogger(__name__)
 #: (session key, semanticHash) -> DataFrame, insertion == recency order
 _PERSISTED: dict[tuple[int, int], DataFrame] = {}
 #: sized with headroom over the largest per-query registration count
-#: (ADVICE r16: r16's optimizations register 3-4 frames per query and
-#: _MAX=8 left a composed pipeline one eviction away from silently
-#: reverting a still-referenced frame to full recompute; the largest
-#: observed single-query count is 5 — pipeline_corpus_dedup — so 16
-#: covers two composed pipelines). Frames are reduced intermediates
-#: (signature/pair/centroid tables), so the memory bound stays modest.
+#: (queries register 3-4 frames each, and _MAX=8 left a composed
+#: pipeline one eviction away from silently reverting a still-referenced
+#: frame to full recompute; the largest single-query count is 5 —
+#: pipeline_corpus_dedup — so 16 covers two composed pipelines).
+#: Frames are reduced intermediates (signature/pair/centroid tables),
+#: so the memory bound stays modest.
 _MAX = 16
 
-#: capacity evictions since process start (ADVICE r16): eviction of
+#: capacity evictions since process start: eviction of
 #: the LRU slot while a query is still being constructed can revert a
 #: referenced frame to full recompute with no other signal — the
 #: counter plus the warning below make that visible/testable.
@@ -65,7 +64,7 @@ def persist_bounded(df: DataFrame) -> DataFrame:
         # semanticHash is 32-bit: two DIFFERENT plans can collide on
         # one key in a session. Dropping the slot silently would
         # leave the old frame cached untracked — beyond both the
-        # recency bound and release_all()'s reach (ADVICE r12).
+        # recency bound and release_all()'s reach.
         # Unpersisting a non-shared entry is always safe; when the
         # plans ARE semantically equal they share one CacheManager
         # entry, so unpersisting would yank it from under `df`.
@@ -104,8 +103,7 @@ def release_all() -> None:
     Called by bench.py between queries (alongside its existing
     ``clearCache`` assumption) so a batch of 8 heavy graph queries
     cannot hold all ``_MAX`` slots concurrently — memory headroom at
-    sf1+ is deterministic instead of depending on batch composition
-    (VERDICT r11 item 8).
+    sf1+ is deterministic instead of depending on batch composition.
     """
     while _PERSISTED:
         _, old = _PERSISTED.popitem()
@@ -124,8 +122,8 @@ _PATH_MEMO_ATTR = "_lse_path_memo"
 def memo_per_path(spark, key: str, path: str, compute, on_evict=None):
     """Memoize a bounded construction-time artifact per (session,
     ``key``, ``path`` stat) — the generalization of the IVF codebook
-    memo (VERDICT r12 item 4) that moved the whole IVF family off the
-    construction-jobs allowlist. Semantics:
+    memo that moved the whole IVF family off the construction-jobs
+    allowlist. Semantics:
 
     - the artifact is computed by ``compute()`` on FIRST touch of a
       path and re-used for every later DataFrame construction against
@@ -135,20 +133,20 @@ def memo_per_path(spark, key: str, path: str, compute, on_evict=None):
       re-computes instead of silently reusing a stale artifact; for
       a DIRECTORY path (Spark-written datasets) the key also folds
       in a digest of every file's (relpath, mtime_ns, size), walked
-      recursively (ADVICE r13 + r14 review): an in-place part-file
+      recursively: an in-place part-file
       rewrite that keeps entry names — including one that RESTORES
       an older mtime (cp -p / rsync -a), or one inside a partition
       subdirectory — must invalidate result-bearing artifacts
       (bloom masks, candidate matrices, sample broadcasts), not
       serve stale query output;
     - ONE live entry per (key, path): replace, don't accumulate stat
-      generations (ADVICE r11), so long-lived sessions that rewrite
+      generations, so long-lived sessions that rewrite
       tmp fixture dirs stay bounded;
     - session-attr storage scopes the memo to the SparkSession
       lifetime (a stopped session's artifacts are not pinned by a
       module global).
 
-    ``on_evict`` (r13 review): called with the OLD value when a
+    ``on_evict``: called with the OLD value when a
     stale entry is replaced after a path rewrite — artifacts holding
     executor-side resources (a pyspark Broadcast) pass a release
     hook (e.g. ``lambda bc: bc.unpersist()``) so rewrite generations
@@ -165,8 +163,7 @@ def memo_per_path(spark, key: str, path: str, compute, on_evict=None):
         stat_key = (st.st_mtime_ns, st.st_size)
         if os.path.isdir(path):
             # digest of EVERY file's (relpath, mtime_ns, size),
-            # walked recursively in sorted order (r14 review closing
-            # the ADVICE r13 gap for real): a max-only key missed any
+            # walked recursively in sorted order: a max-only key missed any
             # rewrite that didn't move the max tuple (e.g. cp -p
             # restoring an OLDER part file), and a non-recursive scan
             # missed in-place rewrites inside partition
@@ -195,7 +192,7 @@ def memo_per_path(spark, key: str, path: str, compute, on_evict=None):
                         # means "path missing" and MATCHES a prior
                         # None, so one persistently unstat-able file
                         # would otherwise freeze invalidation for the
-                        # whole dataset dir (ADVICE r14). The marker
+                        # whole dataset dir. The marker
                         # keeps the key live — other files' rewrites
                         # still change it — and changes it again if
                         # the failure itself appears/clears/moves.

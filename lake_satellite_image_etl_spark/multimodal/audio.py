@@ -43,17 +43,6 @@ def decode_fwav(blob: bytes) -> tuple[np.ndarray, int]:
     return np.frombuffer(blob, dtype="<i2", offset=HEADER.size, count=n), sr
 
 
-def decode_standard_audio(blob: bytes):  # pragma: no cover
-    """Decode mp3/flac/wav — requires an audio lib, absent here."""
-    try:
-        import soundfile  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "audio codecs unavailable; use the FWAV container"
-        ) from exc
-    raise NotImplementedError
-
-
 def synth_fwav(entity_id: int, n_samples: int = 2048) -> bytes:
     """Deterministic int16 waveform: integer-recurrence 'chirp' (no
     float RNG), amplitude bounded well inside int16."""
@@ -306,8 +295,7 @@ def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-clip state only (one clip's frame energies); segments
     stream out of the Arrow batch with no shuffle until whatever
-    aggregation the caller adds. Real codecs stay import-gated as
-    documented in decode_standard_audio."""
+    aggregation the caller adds."""
     ids = (
         read_table(spark, sf_dir, "supplier")
         .select(F.col("s_suppkey").cast("long").alias("entity_id"))

@@ -59,17 +59,6 @@ def decode_fvid(blob: bytes) -> tuple[np.ndarray, int]:
     return frames, fps
 
 
-def decode_standard_video(blob: bytes):  # pragma: no cover
-    """Decode h264/vp9/webm — requires a video lib, absent here."""
-    try:
-        import av  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "video codecs unavailable; use the FVID container"
-        ) from exc
-    raise NotImplementedError
-
-
 def synth_fvid(entity_id: int) -> bytes:
     """Deterministic grayscale clip: pixel(f, y, x) =
     (entity_id*31 + f*17 + y*5 + x*3) mod 251 — pure integer math the
@@ -326,7 +315,7 @@ def multimodal_video_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the modality trio with multimodal_audio_vad (energy
     islands) and multimodal_image_tiles (patchify): same plumbing —
     opaque binary column, vectorized Arrow kernel, no shuffle, full
-    oracle; real codecs stay import-gated (decode_standard_video)."""
+    oracle."""
     return video_shot_segments(with_videos(spark, sf_dir))
 
 

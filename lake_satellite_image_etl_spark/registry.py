@@ -75,22 +75,26 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: correctness row (``CORRECTNESS_r{N}.json``)
 SLA_ROUNDS = 6
 
-#: entries whose kernels changed after their last driver row; they are
-#: re-checked ahead of the stalest tier. Drop a name once a round file
-#: newer than its change lists it.
-RECHECK = (
-    "raster_clip_pipeline",
-    "raster_stats_pipeline",
-    "raster_clip_vector_boundary",
-    "pipeline_image_records",
-    "stream_dedup_batch",
-    "multimodal_image_dedup",
-    "dedup_cluster_assign",
-    "dedup_canonical_keep",
-    "sample_cluster_safe_split",
-    "pipeline_corpus_dedup",
-    "graph_components_star",
-    "sink_artifact_manifest",
+#: entries whose kernels changed after their last driver row, each
+#: mapped to the round after which it changed. They are re-checked
+#: ahead of the stalest tier until a round file past that round lists
+#: them, so a name expires without an edit.
+RECHECK: dict[str, int] = dict.fromkeys(
+    (
+        "raster_clip_pipeline",
+        "raster_stats_pipeline",
+        "raster_clip_vector_boundary",
+        "pipeline_image_records",
+        "stream_dedup_batch",
+        "multimodal_image_dedup",
+        "dedup_cluster_assign",
+        "dedup_canonical_keep",
+        "sample_cluster_safe_split",
+        "pipeline_corpus_dedup",
+        "graph_components_star",
+        "sink_artifact_manifest",
+    ),
+    17,
 )
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -114,16 +118,17 @@ def load_latest_rounds(root: str = _REPO_ROOT) -> dict[str, int]:
 
 
 def rotation_order(
-    names: list[str], latest: dict[str, int], recheck: tuple[str, ...]
+    names: list[str], latest: dict[str, int], recheck: dict[str, int]
 ) -> list[str]:
     """Order ``names`` (registration order) for the correctness gate.
 
     Groups, in order: never-checked entries; entries at the SLA edge
     (``latest <= next_round - SLA_ROUNDS``, ``next_round`` one past the
     newest round seen), which breach the SLA if the next round skips
-    them; ``recheck``; the rest. Within a group the stalest come first,
-    ties in registration order. An empty ``latest`` makes every entry
-    never-checked, so the result is registration order.
+    them; ``recheck`` names not yet checked past their round; the rest.
+    Within a group the stalest come first, ties in registration order.
+    An empty ``latest`` makes every entry never-checked, so the result
+    is registration order.
     """
     edge = max(latest.values(), default=0) + 1 - SLA_ROUNDS
 
@@ -132,7 +137,7 @@ def rotation_order(
         group = (
             0 if name not in latest
             else 1 if latest[name] <= edge
-            else 2 if name in recheck
+            else 2 if latest[name] <= recheck.get(name, 0)
             else 3
         )
         return group, latest.get(name, 0), i

@@ -29,6 +29,20 @@ one: cloudpickle sends those by reference, and loading them imports
 their module. A nested function is sent by value and imports only the
 names its body uses; over stdlib and numpy names alone it imports
 nothing of the package (see ``sinks.write_binary_artifacts``).
+
+Generated-code cache. Catalyst compiles each whole-stage and
+expression plan to a Janino class and keeps the compiled classes in a
+per-JVM cache keyed by their source. A cache smaller than the working
+set costs twice: a warm query pays about 4-5 ms of Janino time for each
+class it compiles again, and the JIT then compiles the fresh class's
+hot methods again. Measured working sets: one ``corpus_dedup``
+benchmark op compiles 96 classes cold, and with Spark's default of 100
+entries every warm op recompiled 25-36 of them; a cold pass over all
+225 registry entries at sf0.001 compiles about 2,750. The cache is
+split into segments that each evict their least recently used class,
+so a working set near its size still thrashes. ``CODEGEN_CACHE_ENTRIES``
+is the smallest power of two that holds the registry's set (the
+measurements are beside it).
 """
 
 from __future__ import annotations
@@ -41,6 +55,17 @@ import zipimport
 from pyspark.sql import SparkSession
 
 _DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+#: compiled classes Spark's generated-code cache keeps (static conf
+#: ``spark.sql.codegen.cache.maxEntries``), measured with two passes over
+#: every registry entry at sf0.001 on local[2]. Warm-pass recompiles:
+#: 3,688-3,692 at 100, 2,483 at 2,048, 38-109 at 4,096, 93 at 8,192.
+#: Warm pass 44-46 s at 100, 35-37 s at 4,096. Keeping the ~2,750
+#: classes costs about 20 MB of metaspace (234 against 213 MB) and
+#: 70-130 MB of heap after a full GC; the JVM's peak RSS read 2.1-3.0 GB
+#: on both sides, set by the 2 GB heap. A corpus_dedup op's ~96 classes
+#: leave metaspace where it was (163 MB after 8 ops on both sides).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -85,6 +110,8 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer."
             "InferFiltersFromGenerate",
         )
+        # Static conf: only a new session can change it.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Deterministic, oracle-comparable timestamps.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

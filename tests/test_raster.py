@@ -325,8 +325,6 @@ def test_audio_features_golden(spark):
         round(float(np.sqrt(frame_sq.max() / au.FRAME)), 6)
     )
     assert f5["duration_ms"] == pytest.approx(round(1000.0 * 2048 / 16000, 3))
-    with pytest.raises(NotImplementedError):
-        au.decode_standard_audio(b"RIFF....")
 
 
 def test_video_frame_features_golden(spark):
@@ -353,8 +351,6 @@ def test_video_frame_features_golden(spark):
         np.abs(sampled[k] - sampled[k - 1]).sum()
     )
     assert got[(3, fi)]["n_frames"] == vi.N_FRAMES
-    with pytest.raises(NotImplementedError):
-        vi.decode_standard_video(b"\x00\x00\x00 ftypmp42")
 
 
 def test_binaryfile_scan(spark):

@@ -62,17 +62,19 @@ def test_rotation_order_groups_and_tie_break():
 
     # newest round 17, so the next is 18 and the SLA edge is round 12
     names = ["fresh", "edge_b", "recheck_new", "never", "old", "edge_a",
-             "recheck_old", "old_twin", "newest"]
+             "recheck_old", "old_twin", "newest", "recheck_done"]
     latest = {"fresh": 16, "edge_b": 12, "recheck_new": 17, "old": 13,
               "edge_a": 11, "recheck_old": 15, "old_twin": 13,
-              "newest": 17}
-    order = rotation_order(names, latest, ("recheck_old", "recheck_new"))
+              "newest": 17, "recheck_done": 17}
+    recheck = {"recheck_old": 17, "recheck_new": 17, "recheck_done": 16}
+    order = rotation_order(names, latest, recheck)
     assert order == [
         "never",                         # never checked
         "edge_a", "edge_b",              # at the SLA edge, stalest first
         "recheck_old", "recheck_new",    # recheck, stalest first
         "old", "old_twin",               # rest: tie kept in registration order
         "fresh", "newest",
+        "recheck_done",                  # checked past its round: expired
     ]
 
 
@@ -81,8 +83,8 @@ def test_rotation_order_ties_keep_registration_order():
 
     names = ["c", "a", "d", "b"]
     latest = dict.fromkeys(names, 9)
-    assert rotation_order(names, latest, ()) == names
-    assert rotation_order(names[::-1], latest, ()) == names[::-1]
+    assert rotation_order(names, latest, {}) == names
+    assert rotation_order(names[::-1], latest, {}) == names[::-1]
 
 
 def test_rotation_order_without_rounds_is_registration_order():
@@ -99,14 +101,14 @@ def test_recheck_names_are_registered():
     from lake_satellite_image_etl_spark.registry import RECHECK, load_all
 
     queries, _ = load_all()
-    assert len(set(RECHECK)) == len(RECHECK)
     assert set(RECHECK) <= set(queries)
 
 
 def test_window_front_on_this_repo():
-    """The front of the window is the SLA-edge tier, then RECHECK, then
-    the stalest rows in registration order; with round 17 the newest
-    file, that is the four r12 rows, the 12 rechecks and 34 r13 rows."""
+    """The front of the window is the SLA-edge tier, then the unexpired
+    RECHECK names, then the stalest rows in registration order; with
+    round 17 the newest file, that is the four r12 rows, the 12 rechecks
+    and 34 r13 rows."""
     from lake_satellite_image_etl_spark import registry
 
     queries, oracles = registry.load_all()
@@ -118,8 +120,9 @@ def test_window_front_on_this_repo():
     heads = [n for n in registered if latest[n] <= edge]
     window = names[:50]
     assert window[: len(heads)] == heads
-    k = len(heads) + len(registry.RECHECK)
-    assert set(window[len(heads):k]) == set(registry.RECHECK)
+    recheck = {n for n, r in registry.RECHECK.items() if latest[n] <= r}
+    k = len(heads) + len(recheck)
+    assert set(window[len(heads):k]) == recheck
     rest = window[k:]
     assert rest == sorted(rest, key=lambda n: (latest[n], registered.index(n)))
     if max(latest.values()) == 17:
@@ -132,7 +135,8 @@ def test_window_front_on_this_repo():
 
 def test_fake_next_round_still_audits_ok(tmp_path):
     """Once the next round file lands, the window rotates on its own:
-    the rows it checked fall behind and the audit stays green."""
+    the rows it checked fall behind, the RECHECK names it listed expire
+    and the audit stays green."""
     sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
     from rotation_audit import audit
 
@@ -145,6 +149,8 @@ def test_fake_next_round_still_audits_ok(tmp_path):
     latest = registry.load_latest_rounds(str(tmp_path))
     nxt = max(latest.values()) + 1
     checked = list(queries)[:50]
+    recheck = {n for n, r in registry.RECHECK.items() if latest[n] <= r}
+    assert recheck <= set(checked)
     row = {"rows_match": True, "schema_match": True, "hash_match": True}
     with open(tmp_path / f"CORRECTNESS_r{nxt}.json", "w") as fh:
         json.dump(dict.fromkeys(checked, row), fh)
@@ -160,3 +166,4 @@ def test_fake_next_round_still_audits_ok(tmp_path):
     # the oldest rows left unchecked now lead the window
     oldest = [n for n in names if latest[n] == min(latest.values())]
     assert names[: len(oldest)] == oldest
+    assert recheck.isdisjoint(names[:50])

@@ -9,7 +9,11 @@ Usage:
         [--plans-dir plans/r16] [--suffix before] name [name ...]
 
 Prints one line per query: name, per-rep seconds, min, and the
-exchange / Python-eval node counts parsed from the formatted plan.
+exchange / Python-eval node counts parsed from the formatted plan; then
+each rep's Janino compiles (count from Spark's ``CodegenMetrics``
+compilation-time histogram, ms from ``CodeGenerator.compileTime``). A
+warm rep that still compiles shows a plan that misses the generated-code
+cache.
 This is an iteration tool — the committed artifact numbers come from
 bench.py (fresh-JVM protocol); these warm numbers only rank plan
 variants against each other inside one session.
@@ -45,6 +49,8 @@ def main() -> None:
     spark = get_spark(app_name="profile-query")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
+    compile_count = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
+    compile_ns = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
     os.makedirs(args.plans_dir, exist_ok=True)
 
     for name in args.names:
@@ -82,17 +88,20 @@ def main() -> None:
         else:
             n_exch = n_bcast = n_py = -1
             joins = []
-        reps = []
+        reps, compiles = [], []
         for _ in range(args.reps):
             spark.sparkContext.setJobDescription(f"profile: {name}")
+            c0, ns0 = compile_count(), compile_ns()
             t0 = time.perf_counter()
             fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
             reps.append(round(time.perf_counter() - t0, 3))
+            compiles.append(f"{compile_count() - c0}/{(compile_ns() - ns0) / 1e6:.0f}ms")
             release_all()
             spark.catalog.clearCache()
         print(
             f"{name}: reps={reps} min={min(reps):.3f} "
-            f"exchanges={n_exch}(bcast {n_bcast}) pyeval={n_py} joins={joins}",
+            f"exchanges={n_exch}(bcast {n_bcast}) pyeval={n_py} joins={joins} "
+            f"compiles={compiles}",
             flush=True,
         )
 
