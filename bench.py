@@ -4,57 +4,59 @@
 summary — the slowest 20 entries inline under ``"slowest"``, the full
 per-query map under ``"queries"`` in ``BENCH_DETAIL.json``; harness
 stdout capture keeps only a ~2000-char tail, which a 200+-entry line
-overflows). Queries are assigned to fresh-JVM batches by
-``md5(name) mod n_batches`` — a HASH BUCKET, not a position in a
-sorted list (VERDICT r11 item 3; r15 adds pre+post box-speed
-calibration, a calibration-normalized total beside the raw one, and
-min-of-2 isolated timing when the yardstick spread exceeds 3x —
-VERDICT r14 item 4; r16 makes the artifact timeout-proof per VERDICT
-r15 item 1: the payload line + BENCH_DETAIL.json are written right
-after the batched phase AND again after isolation, the isolated
-phase runs under $SPARK_GRAFT_BENCH_BUDGET_SEC with coverage-before-
-precision degradation, and the calibration spread/basis use WARM
-samples only; r17 closes the three VERDICT r16 measurement items:
-the warm pass's caches are RELEASED before the timed run so the
-timed region pays for its own persists — persist-heavy rows read
-HIGHER than r16 by exactly the donated warm work, which is honesty,
-not regression — the detail file is written per core count
-(BENCH_DETAIL_c{N}.json, plus the plain 32-core mover baseline), and
-the isolated phase gets a phase-anchored budget floored at the
-slowest-10 rep-1 estimate with a partial emit after every sample):
-positional chunking of the
-md5-sorted list meant ONE added registry entry shifted every later
-name into a different batch, so in-batch timings were not comparable
-across rounds whenever the registry grew. Bucketing is both
-family-interleaved (prefixes don't survive hashing — the r10 fix
-stands: alphabetical order had packed ``dedup_*``/``similarity_*``
-into all-heavy JVMs whose GC/codegen accumulation inflated late
-entries ~2x) and insertion-stable: an added entry perturbs only the
-one bucket it hashes into, and every other query keeps its exact JVM
-cohort until the registry crosses the next multiple of ``BATCH``
-(n_batches bumps — rare and visible in the artifact's
-``n_batches``). Bucket sizes are Poisson around ``BATCH`` rather
-than exact; within-bucket order stays md5. After the batched run,
-the slowest 10 entries re-run ISOLATED (one query per fresh JVM) and
-the results land under ``"isolated"`` in BENCH_DETAIL.json, so a
-verdict can separate plan cost from batch placement without
-re-running.
+overflows).
+
+Queries are assigned to fresh-JVM batches by ``md5(name) mod
+n_batches`` — a HASH BUCKET, not a position in a sorted list:
+positional chunking of the md5-sorted list meant ONE added registry
+entry shifted every later name into a different batch, so in-batch
+timings were not comparable across rounds whenever the registry grew.
+Bucketing is both family-interleaved (prefixes don't survive hashing;
+alphabetical order had packed ``dedup_*``/``similarity_*`` into
+all-heavy JVMs whose GC/codegen accumulation inflated late entries
+~2x) and insertion-stable: an added entry perturbs only the one bucket
+it hashes into, and every other query keeps its exact JVM cohort until
+the registry crosses the next multiple of ``BATCH`` (n_batches bumps —
+rare and visible in the artifact's ``n_batches``). Bucket sizes are
+Poisson around ``BATCH`` rather than exact; within-bucket order stays
+md5. After the batched run, the slowest 10 entries re-run ISOLATED
+(one query per fresh JVM) and the results land under ``"isolated"`` in
+BENCH_DETAIL.json, so a verdict can separate plan cost from batch
+placement without re-running.
+
+The protocol around that:
+- box-speed calibration runs before and after the batches; the
+  artifact carries a calibration-normalized total beside the raw one,
+  and the spread and normalization basis use WARM samples only;
+- isolated timing is min-of-2 when the yardstick spread exceeds 3x;
+- the artifact is timeout-proof: the payload line is printed after
+  every batch, the payload line + BENCH_DETAIL.json are written right
+  after the batched phase AND again after isolation, and the isolated
+  phase runs under $SPARK_GRAFT_BENCH_BUDGET_SEC with
+  coverage-before-precision degradation;
+- the isolated phase gets a phase-anchored budget floored at the
+  slowest-10 rep-1 estimate, with a partial emit after every sample;
+- the warm pass's caches are RELEASED before the timed run, so the
+  timed region pays for its own persists — persist-heavy rows read
+  higher than under a protocol that kept them, by exactly the donated
+  warm work, which is honesty, not regression;
+- the detail file is written per core count (BENCH_DETAIL_c{N}.json,
+  plus the plain 32-core mover baseline).
 
 Each query is warmed once (plan compile + scan setup) and then timed on
 a ``noop``-format write — the full plan executes on the executors and
 every result row is materialized and discarded there, so the timing
 measures the engine, not the driver transfer (a plain ``collect()``
-would bill multi-100k-row results' ser/de to the query; VERDICT r1
-flagged exactly that on join_fanout_1n).
+would bill multi-100k-row results' ser/de to the query, as it did on
+join_fanout_1n).
 
 The run is split into FORKED BATCHES — a fresh JVM per
-``$SPARK_GRAFT_BENCH_BATCH`` (default 8) queries (VERDICT r6 item 7;
-r8 halved 16 -> 8 after measuring up to ~2-3x inflation on heavy
-queries landing late in a 16-query batch — e.g. pipeline_corpus_dedup
-8.9 s in-batch vs 3.4 s isolated):
+``$SPARK_GRAFT_BENCH_BATCH`` (default 8) queries; 16-query batches
+inflated heavy queries landing late in the batch up to ~2-3x (e.g.
+pipeline_corpus_dedup 8.9 s in-batch vs 3.4 s isolated):
 ~90 queries in one shared JVM accumulate codegen caches / broadcast
 refs / GC pressure until late queries read 3-10× their isolated time
-(r6's agg_exact_corr printed 18.2 s shared vs 1.66 s isolated), and
+(agg_exact_corr once printed 18.2 s shared vs 1.66 s isolated), and
 per-query System.gc() was not enough. Batch JVM startup costs ~10 s
 each but makes the artifact trustworthy without footnotes.
 """
@@ -71,8 +73,15 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from lake_satellite_image_etl_spark.session import DEFAULT_CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BATCH = int(os.environ.get("SPARK_GRAFT_BENCH_BATCH", "8"))
+
+#: core count label for the per-cpus detail file: the ``local[N]`` the
+#: session factory resolved, so an 8-core run never clobbers the
+#: 32-core run's full per-query map
+_CPUS = DEFAULT_CPUS
 
 
 def _sf_label(sf_dir: str) -> float:
@@ -93,12 +102,12 @@ def _query_names() -> list[str]:
     # md5(name) order, not registry order and not alphabetical: batch
     # composition (which 8 queries share a fresh JVM) is part of each
     # query's measured time, so it must be stable across rounds even
-    # when the registry reorders entries (VERDICT r9 item 4) — and it
-    # must INTERLEAVE heavy families, which alphabetical order packed
-    # into all-heavy batches (VERDICT r10 item 2: dedup_*/similarity_*
-    # filled whole JVMs and late entries read up to ~2x their isolated
-    # time). md5 is both: deterministic in the name alone, and
-    # family-scattering because prefixes don't survive hashing.
+    # when the registry reorders entries — and it must INTERLEAVE
+    # heavy families, which alphabetical order packed into all-heavy
+    # batches (dedup_*/similarity_* filled whole JVMs and late entries
+    # read up to ~2x their isolated time). md5 is both: deterministic
+    # in the name alone, and family-scattering because prefixes don't
+    # survive hashing.
     import hashlib
 
     return sorted(queries, key=lambda n: hashlib.md5(n.encode()).hexdigest())
@@ -124,7 +133,7 @@ def run_batch(names: list[str]) -> None:
         """Warm (plan compile + scan setup) then time a COLD noop run.
 
         The caches the warm pass materialized are released between the
-        two passes (VERDICT r16 item 1): any ``persist_bounded``
+        two passes: any ``persist_bounded``
         subtree the warm ``limit(1)`` computed would otherwise be read
         from cache inside the timed region, so a change from "compute
         a shared subtree twice" to "persist it" showed up as 2×→0×
@@ -170,8 +179,8 @@ def run_batch(names: list[str]) -> None:
                 }
             except Exception as e:  # noqa: BLE001
                 print(f"bench twin error in {name}: {e}", file=sys.stderr)
-        # release every registry-managed persist() between queries
-        # (VERDICT r11 item 8): a batch of heavy graph/ANN queries can
+        # release every registry-managed persist() between queries:
+        # a batch of heavy graph/ANN queries can
         # otherwise hold all _MAX persist slots concurrently, making
         # memory headroom depend on batch composition at sf1+.
         release_all()
@@ -183,8 +192,8 @@ def run_batch(names: list[str]) -> None:
 
 def run_calibration() -> None:
     """Child mode: fixed reference workloads in THIS fresh process — a
-    box-speed yardstick embedded in every bench map (r14). The r13→r14
-    grading window saw unchanged golden rows inflate 1.6-4× purely
+    box-speed yardstick embedded in every bench map. One grading
+    window saw unchanged golden rows inflate 1.6-4× purely
     from machine state (a 20 M-row groupBy control read 5-7.5 s where
     <1 s is normal; consecutive same-size matmuls swung 0.014 → 1.7 s)
     and the adjudication had to be reconstructed after the fact.
@@ -245,21 +254,21 @@ def run_calibration() -> None:
 
 
 #: healthy-box nominal for the 20 M-row groupBy control: the quiet-box
-#: reading the r14 verdict's gate names (`spark_groupby_20m_sec.max <
-#: ~1.5`, min observed 0.647 during the r14 driver run, ~0.6-0.7 on
-#: every quiet calibration this repo has logged). The normalized total
+#: reading (gate `spark_groupby_20m_sec.max < ~1.5`, min observed 0.647
+#: during one driver run, ~0.6-0.7 on every quiet calibration this repo
+#: has logged). The normalized total
 #: answers "what would this map read on THAT box" — a first-order
 #: correction (shuffle-bound queries track the control closely,
 #: numpy-heavy eval rows track the matmul control instead), so the RAW
 #: total stays the primary metric and the normalized one exists for
-#: round-over-round comparison on bimodal boxes (VERDICT r14 item 4).
+#: round-over-round comparison on bimodal boxes.
 NOMINAL_GROUPBY_SEC = 0.65
 
 #: yardstick spread (max/min of the groupBy control across the pre-
 #: and post-run calibrations) past which the isolated phase times each
 #: query TWICE in two fresh JVMs and records the min — on a bimodal
 #: box a single isolated sample can land in either mode and the min is
-#: the defensible plan-cost reading (VERDICT r14 item 4b).
+#: the defensible plan-cost reading.
 ISOLATED_MIN_OF_2_SPREAD = 3.0
 
 
@@ -279,9 +288,9 @@ def _calibrate(tag: str) -> dict:
 
 
 def _merge_calibration(pre: dict, post: dict) -> dict:
-    """One calibration object for the artifact: the r14 top-level keys
-    (min/max per control) now span BOTH runs — round-over-round
-    comparable with the r14 map — plus the raw pre/post children, the
+    """One calibration object for the artifact: the top-level keys
+    (min/max per control) span BOTH runs — comparable with maps that
+    had a single calibration run — plus the raw pre/post children, the
     spread, and the normalization basis (median of all groupBy
     samples across both runs)."""
     out: dict[str, object] = {}
@@ -305,16 +314,16 @@ def _merge_calibration(pre: dict, post: dict) -> dict:
             out[key] = {"min": min(samples), "max": max(samples)}
     sg = out.get("spark_groupby_20m_sec")
     if sg and sg["min"] > 0:
-        # spread + normalization basis over WARM samples only (ADVICE
-        # r15): the FIRST groupBy sample of every fresh calibration
+        # spread + normalization basis over WARM samples only: the
+        # FIRST groupBy sample of every fresh calibration
         # child is the structural JVM-warmup reading (~5-10x steady
         # state on every run this repo has logged), so a spread over
         # all samples fires the min-of-2 trigger on a perfectly
         # healthy box and a median basis over them inflates
-        # value_normalized (r15: factor 0.48 vs ~1.0 warm). The
+        # value_normalized (measured: factor 0.48 vs ~1.0 warm). The
         # top-level min/max above still span ALL samples on purpose —
-        # they stay round-comparable with the r14/r15 maps, and the
-        # warmup magnitude remains visible there.
+        # they stay comparable with older maps, and the warmup
+        # magnitude remains visible there.
         warm = sorted(
             s
             for c in (pre, post)
@@ -348,9 +357,9 @@ _now = time.monotonic
 #: (``_iso_est_sec``: ~27 s per child for ~5 s queries ≈ 15 + 2·q)
 JVM_STARTUP_EST_SEC = 15.0
 
-#: rows under an explicit verdict watch (VERDICT r16 item 5:
-#: dq_knn_recall_eval's 8.12 s driver reading could not be
-#: adjudicated because the isolated column was empty): always joins
+#: rows under an explicit verdict watch (dq_knn_recall_eval's 8.12 s
+#: driver reading could not be adjudicated because the isolated
+#: column was empty): always joins
 #: the isolated re-run — even when its batched reading no longer
 #: ranks in the slowest-10 — so the watch can close on
 #: driver-protocol numbers instead of another warm-rep adjudication.
@@ -358,18 +367,17 @@ WATCH_ISOLATED = ("dq_knn_recall_eval",)
 
 
 def _budget_sec() -> float:
-    """Wall-clock budget for the WHOLE bench invocation (VERDICT r15
-    item 1b). The r15 driver artifact was rc 124 / parsed null: the
-    isolated phase grew to 36 fresh JVMs under min-of-2 and blew the
-    driver's window (observed: r14's ~700 s survived, r15's ~950 s
-    did not — so the ceiling is between them, likely 900). The
-    default leaves margin under that floor; the batched phase always
-    runs in full (it IS the artifact), the budget governs how much
-    isolated re-measurement fits after it. Since r17 the isolated
-    phase is additionally floored at the slowest-10 rep-1 estimate
-    (``_iso_rep1_floor``): a batched phase that outlasts the whole
-    budget can shrink the isolated column to the floor, never to
-    empty (VERDICT r16 item 2)."""
+    """Wall-clock budget for the WHOLE bench invocation. A driver
+    artifact once came back rc 124 / parsed null: the isolated phase
+    grew to 36 fresh JVMs under min-of-2 and blew the driver's window
+    (observed: a ~700 s run survived, a ~950 s one did not — so the
+    ceiling is between them, likely 900). The default leaves margin
+    under that floor; the batched phase always runs in full (it IS
+    the artifact), the budget governs how much isolated
+    re-measurement fits after it. The isolated phase is additionally
+    floored at the slowest-10 rep-1 estimate (``_iso_rep1_floor``): a
+    batched phase that outlasts the whole budget can shrink the
+    isolated column to the floor, never to empty."""
     return float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "780"))
 
 
@@ -390,7 +398,7 @@ def _time_one_isolated(name: str) -> float:
 def _iso_est_sec(query_sec: float) -> float:
     """Wall estimate for ONE isolated child: JVM startup plus TWO
     executions of the query — the warm pass and the timed cold run
-    (the r17 protocol releases caches between them, so the warm pass
+    (the protocol releases caches between them, so the warm pass
     costs a full execution too). The first floored run this session
     measured ~27 s/child for ~5 s queries — ≈ 15 + 2·q — against the
     old ``10 + q`` estimate, which is why its floor ran out at 8 of
@@ -404,9 +412,9 @@ def _iso_rep1_floor(
     """Minimum isolated-phase budget: enough (with a 1.5× overrun
     margin) for ONE sample of each of the slowest-10 plus any watch
     rows — the smallest isolated column a verdict can adjudicate
-    plan-vs-placement with (VERDICT r16 item 2: r16's fixed
-    start-anchored budget was consumed entirely by a slow batched
-    phase and BOTH driver runs recorded ``isolated: {}``)."""
+    plan-vs-placement with (a fixed start-anchored budget was once
+    consumed entirely by a slow batched phase and BOTH driver runs
+    recorded ``isolated: {}``)."""
     est = 0.0
     for n in slow_names[:n_floor]:
         t = timings.get(n, float("nan"))
@@ -423,7 +431,7 @@ def _run_isolated_budgeted(
     on_sample=None,
 ) -> tuple[dict[str, float], dict[str, list[float]], dict[str, list[str]]]:
     """Isolated re-runs under a wall-clock budget, COVERAGE before
-    PRECISION (VERDICT r15 items 1b/4): the schedule is rep-major —
+    PRECISION: the schedule is rep-major —
     one sample of every name first, the min-of-2 second samples only
     after every name has one — so a depleting budget degrades
     min-of-2 → min-of-1 → drops movers (they follow the slowest-10
@@ -433,11 +441,11 @@ def _run_isolated_budgeted(
     attempted at all (two samples of half the names is worth less
     than the skipped names' one sample).
 
-    ``t_start``/``budget`` are PHASE-anchored since r17 (VERDICT r16
-    item 2): the caller passes the isolated phase's own start time
-    and a budget floored at the slowest-10 rep-1 estimate, so a slow
-    batched phase can no longer deplete the isolated column to empty.
-    ``on_sample`` (r17) is called with the mins-so-far after every
+    ``t_start``/``budget`` are PHASE-anchored: the caller passes the
+    isolated phase's own start time and a budget floored at the
+    slowest-10 rep-1 estimate, so a slow batched phase can no longer
+    deplete the isolated column to empty. ``on_sample`` is called
+    with the mins-so-far after every
     isolated child, so the caller can emit partial artifacts — a
     driver timeout mid-phase keeps the samples already taken."""
     isolated: dict[str, float] = {}
@@ -501,17 +509,17 @@ def _print_summary(
     pending: bool,
 ) -> None:
     """The driver-facing JSON line (the driver parses the LAST stdout
-    line). Printed after EVERY batch (r16, cumulative partial — see
-    main's batch loop) and then twice more per VERDICT r15 item 1a:
-    once right after the batched phase + calibration merge with
-    isolated_pending=true, and again after the isolated phase — so a
-    driver timeout at ANY point degrades to the most recent partial
-    artifact instead of 'no artifact'. (BENCH_r15 was rc 124 / parsed
-    null because the only print sat at the very end of main; the r16
-    session then measured the box's slow mode stretching the batched
-    phase alone to ~1,560 s — past the driver window the r15 artifact
-    died at — so the batched phase itself needs incremental emits,
-    not just a post-phase one.) Partial lines carry
+    line). Printed after EVERY batch (cumulative partial — see main's
+    batch loop) and then twice more: once right after the batched
+    phase + calibration merge with isolated_pending=true, and again
+    after the isolated phase — so a driver timeout at ANY point
+    degrades to the most recent partial artifact instead of 'no
+    artifact'. (An artifact once came back rc 124 / parsed null
+    because the only print sat at the very end of main; the box's
+    slow mode was then measured stretching the batched phase alone to
+    ~1,560 s — past the driver window that artifact died at — so the
+    batched phase itself needs incremental emits, not just a
+    post-phase one.) Partial lines carry
     ``"batched_pending": true`` + ``n_batches_done`` so a consumer
     can tell a truncated run from a complete one; the final line is
     always last, superseding them."""
@@ -526,14 +534,14 @@ def _print_summary(
         "metric": payload["metric"],
         "value": payload["value"],
         # raw-total x (nominal / warm-median groupBy control): the
-        # round-over-round comparison column on bimodal boxes
-        # (VERDICT r14 item 4) — RAW stays primary
+        # round-over-round comparison column on bimodal boxes — RAW
+        # stays primary
         "value_normalized": payload["value_normalized"],
         "unit": payload["unit"],
         # the FULL per-query map lives in BENCH_DETAIL.json under
         # "queries"; this line carries only the top-20 tail, so the
         # key says so (a consumer parsing "queries" as the full map
-        # would silently see a subset — VERDICT r9 item 4)
+        # would silently see a subset)
         "slowest": slowest,
         "isolated": {k: round(v, 2) for k, v in isolated.items()},
         "isolated_pending": pending,
@@ -553,23 +561,17 @@ def _print_summary(
     print(json.dumps(line), flush=True)
 
 
-#: core count label for the per-cpus detail file (VERDICT r16 item 3:
-#: the driver's 8-core run clobbered the 32-core run's full per-query
-#: map, so PERF_r16 had per_query {} and an empty scaling block)
-_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
 def _write_detail(payload: dict) -> None:
     # full per-query detail to a file: the harness capturing stdout
     # keeps only a tail of it, and 200+ query entries push a single
-    # JSON line past that window (r7's artifact recorded parsed: null
-    # for exactly this reason). Written twice, like the summary line:
-    # after the batched phase and again after isolation. FILTERED
+    # JSON line past that window (an artifact once recorded parsed:
+    # null for exactly this reason). Written twice, like the summary
+    # line: after the batched phase and again after isolation. FILTERED
     # (smoke) runs must not clobber the committed full map — it is
     # both the round artifact and the previous-round baseline the
-    # mover adjudication reads. Written KEYED ON $SPARK_GRAFT_CPUS
-    # (VERDICT r16 item 3) so runs at different core counts never
-    # clobber each other; the plain BENCH_DETAIL.json is additionally
+    # mover adjudication reads. Written KEYED ON the core count so
+    # runs at different core counts never clobber each other; the
+    # plain BENCH_DETAIL.json is additionally
     # written for the main 32-core run only — it stays the
     # round-over-round mover-adjudication baseline.
     if os.environ.get("SPARK_GRAFT_BENCH_QUERIES"):
@@ -586,9 +588,8 @@ def _write_detail(payload: dict) -> None:
 def _emit_batch_partial(
     timings: dict[str, float], cal_pre: dict, done: int, n_chunks: int
 ) -> None:
-    """One cumulative mid-batched-phase payload line (the ADVICE r16
-    factoring of the inline duplicate in main). The final-batch emit
-    (batched_pending=false, isolated_pending=true) is kept on purpose:
+    """One cumulative mid-batched-phase payload line. The final-batch
+    emit (batched_pending=false, isolated_pending=true) is kept on purpose:
     the post-phase full emit only lands after the post calibration's
     fresh JVM, and a driver window can close inside that gap."""
     _print_summary(
@@ -669,10 +670,10 @@ def main() -> None:
             )
             batch_timings = {n: float("nan") for n in chunk}
         timings.update(batch_timings)
-        # incremental partial artifact after EVERY batch (r16): on a
-        # slow box the batched phase alone can outlast the driver's
-        # window (measured ~1,560 s this session vs the ~900 s window
-        # r15 died inside), and the first full emit below only
+        # incremental partial artifact after EVERY batch: on a slow
+        # box the batched phase alone can outlast the driver's window
+        # (measured ~1,560 s vs the ~900 s window an earlier artifact
+        # died inside), and the first full emit below only
         # happens after the LAST batch — so a timeout mid-phase must
         # degrade to "partial map through batch k", never "parsed:
         # null". The driver parses the LAST stdout line; every later
@@ -725,20 +726,20 @@ def main() -> None:
         "batch_size": BATCH,
         "n_batches": len(chunks),
     }
-    # EARLY artifact emit (VERDICT r15 item 1a): the batched total,
-    # calibration, and full per-query map are now on stdout and disk
+    # EARLY artifact emit: the batched total, calibration, and full
+    # per-query map are on stdout and disk
     # BEFORE any isolated JVM starts — a driver timeout during the
     # isolated phase loses only the isolated column, never the run.
     _write_detail(payload)
     _print_summary(payload, timings, {}, pending=True)
 
-    # isolated re-run of the slowest 10 PLUS round-over-round movers
-    # (VERDICT r10 item 2 / ADVICE r11): one query per FRESH JVM, so
-    # every future verdict can split "the plan is expensive" from
-    # "the batch placement inflated it" without re-running. Skipped
-    # when the run is already filtered (smoke invocations) or via
-    # SPARK_GRAFT_BENCH_ISOLATED=0; wall-clock-budgeted (VERDICT r15
-    # item 1b) so it can never again blow the driver's window.
+    # isolated re-run of the slowest 10 PLUS round-over-round movers:
+    # one query per FRESH JVM, so every future verdict can split "the
+    # plan is expensive" from "the batch placement inflated it"
+    # without re-running. Skipped when the run is already filtered
+    # (smoke invocations) or via SPARK_GRAFT_BENCH_ISOLATED=0;
+    # wall-clock-budgeted so it can never again blow the driver's
+    # window.
     isolated: dict[str, float] = {}
     isolated_runs: dict[str, list[float]] = {}
     isolated_skipped: dict[str, list[str]] = {}
@@ -754,7 +755,7 @@ def main() -> None:
             )
             if v == v
         ][:10]
-        # adjudicate MOVERS automatically (ADVICE r11): any query whose
+        # adjudicate MOVERS automatically: any query whose
         # in-batch time moved >50% vs the previous committed map (and
         # is non-trivial, >1 s on either side) joins the isolated
         # re-run — so a verdict reading a delta always has the
@@ -774,9 +775,9 @@ def main() -> None:
             key=lambda k: -abs(timings[k] - prev[k]),
         )[:8]
         # watch rows go BEFORE the movers (and inside the rep-1
-        # budget floor below): appended last, the r17 final run's
-        # depleting budget skipped exactly the watch row the column
-        # exists to adjudicate
+        # budget floor below): appended last, a depleting budget once
+        # skipped exactly the watch row the column exists to
+        # adjudicate
         watch = [
             n
             for n in WATCH_ISOLATED
@@ -784,7 +785,7 @@ def main() -> None:
         ]
         slow_names += watch
         slow_names += [m for m in movers if m not in slow_names]
-        # min-of-2 on a bimodal box (VERDICT r14 item 4b): when the
+        # min-of-2 on a bimodal box: when the
         # merged WARM yardstick spread exceeds the threshold, one
         # isolated sample can land in either machine mode — two fresh
         # JVMs per query, record the min as the plan-cost reading,
@@ -798,11 +799,11 @@ def main() -> None:
                 file=sys.stderr,
                 flush=True,
             )
-        # PHASE-anchored budget (VERDICT r16 item 2): what is left of
-        # the whole-invocation budget, but never less than the
-        # slowest-10 rep-1 floor — r16's start-anchored budget was
-        # consumed entirely by a slow batched phase and both driver
-        # runs recorded isolated: {}. The floor is the smallest
+        # PHASE-anchored budget: what is left of the whole-invocation
+        # budget, but never less than the slowest-10 rep-1 floor — a
+        # start-anchored budget was once consumed entirely by a slow
+        # batched phase and both driver runs recorded isolated: {}.
+        # The floor is the smallest
         # isolated column a verdict can adjudicate with; partial
         # emits below mean even a mid-phase timeout keeps samples.
         t_iso = _now()

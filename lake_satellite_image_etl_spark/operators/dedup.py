@@ -898,10 +898,12 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: safety bound on propagation rounds — a backstop against a buggy
-#: non-converging loop, far above any real near-dup component diameter
-#: (components are quasi-cliques; diameter grows ~log of chain length).
-CLUSTER_MAX_ROUNDS = 50
+#: round backstop for the star-contraction loop in
+#: ``label_propagate_components``. The alternation provably converges
+#: in O(log² n) rounds (a 64-node chain takes at most 10, pinned in
+#: tests/test_graph_components.py), so the cap is generous, not
+#: load-bearing; exhausting it raises a RuntimeWarning.
+STAR_MAX_ROUNDS = 30
 
 #: edge rows up to which a connected-components call finishes on the
 #: driver (``driver_components``) instead of running distributed
@@ -909,10 +911,12 @@ CLUSTER_MAX_ROUNDS = 50
 #: Measured on random graphs (2^k symmetrized edge rows), Spark
 #: local[2] on a 4-core Xeon host, the driver path (bounded Arrow
 #: collect, union-find, result written to a noop sink) against one
-#: label-propagation round: 2^16 rows 0.32 s vs 0.25 s, 2^17 0.51 vs
-#: 0.49, 2^18 0.82 vs 0.92, 2^19 3.2 vs 0.82, 2^20 4.6 vs 1.7. The
+#: min-label-propagation round: 2^16 rows 0.32 s vs 0.25 s, 2^17 0.51
+#: vs 0.49, 2^18 0.82 vs 0.92, 2^19 3.2 vs 0.82, 2^20 4.6 vs 1.7. The
 #: loop also pays an edge checkpoint and at least two rounds. 2^17
-#: keeps a factor of two below the 2^18-2^19 crossover.
+#: keeps a factor of two below the 2^18-2^19 crossover. The figures
+#: were taken against min-label propagation, the loop that star
+#: contraction replaced, and have not been re-taken since.
 DRIVER_COMPONENTS_MAX_EDGES = 1 << 17
 
 
@@ -964,13 +968,15 @@ def driver_components(pairs: DataFrame, schema: StructType) -> DataFrame | None:
 
 
 def label_propagate_components(edges: DataFrame) -> DataFrame:
-    """Connected components by min-label propagation, iterated TO
-    CONVERGENCE: each round every node takes the min label among
-    itself and its neighbors; stop when no label changed.
+    """Connected components of an undirected graph: (node, label) with
+    label = the component's minimum node id.
 
-    ``edges`` is a directed (src, dst) DataFrame that must already
-    contain both directions of every undirected edge. Returns
-    (node, label) with label = the component's minimum node id.
+    ``edges`` is any two-column (src, dst) pair frame; orientation and
+    duplicates do not matter. The node set is every endpoint of every
+    row, self-loops included, so a node seen only in a self-loop labels
+    itself. The name is older than the kernel (min-label propagation,
+    since replaced by star contraction) and is kept for its callers,
+    perfbench's ``corpus_dedup`` workload and its tracer among them.
 
     Two paths:
     - a graph of at most ``DRIVER_COMPONENTS_MAX_EDGES`` edge rows
@@ -978,24 +984,41 @@ def label_propagate_components(edges: DataFrame) -> DataFrame:
       bounded Arrow collect and finished on the driver by union-find
       (``driver_components``) — one Spark job, and the result is a
       local relation;
-    - a larger graph runs the distributed loop below, the only path
-      that handles a graph too large for the driver.
+    - a larger graph runs LARGE-STAR / SMALL-STAR alternation (Kiveris
+      et al., "Connected Components in MapReduce and Beyond", SoCC'14),
+      the only path that handles a graph too large for the driver.
 
-    Scale shape of the loop (the standard large-graph CC pattern):
-    - each round is ONE shuffle: (node, label) joined against the edge
-      list, then a min-aggregate per node;
-    - the loop-invariant edge list and each round's labels are
-      ``localCheckpoint``-ed (eager) — the checkpoint both avoids
-      re-evaluating upstream lineage (the full MinHash pipeline here)
-      every round AND truncates the otherwise exponentially-growing
-      iterative plan, which is what kills fixed-unroll loops at scale;
-    - convergence is detected with a cheap count on the changed set,
-      so the round count adapts to the real component diameter instead
-      of hard-coding a hop bound (a diameter-6 chain is regression-
-      tested in tests/test_cluster.py)."""
-    src = edges.schema["src"]
+    Each round of the loop rewrites the EDGE SET (no labels table to
+    join):
+
+    - **large-star**: every directed pair (u, v) with v > u is
+      re-pointed at m(u) = min(N(u) ∪ {u}) — one groupBy over the
+      symmetrized pairs for the per-node min, one join back. Safe on
+      high-degree nodes: work is per-EDGE, never a per-node
+      neighborhood collect.
+    - **small-star**: every canonical (lo, hi) group keyed by hi
+      re-points its smaller neighbors (and hi itself) at
+      m(hi) = min(lo) — one groupBy + one join.
+
+    Both steps preserve connectivity and node sets; fixpoints are
+    exactly min-rooted stars, read off as (hi → lo) labels. A round
+    costs O(|E|) shuffles and the round count is O(log² n), not the
+    O(diameter) of min-label propagation: on a near-dup graph whose
+    chained clusters reach diameters in the hundreds, that is the
+    difference between ~6 and ~600 shuffle stages. The edge set also
+    SHRINKS as components contract (distinct() after each rewrite), so
+    later rounds get cheaper. Each rewrite is eagerly
+    ``localCheckpoint``-ed, which cuts the otherwise exponentially
+    growing iterative lineage. Convergence is detected structurally
+    (edge set unchanged under a round), so the result is the true
+    fixpoint, not a hop-bounded approximation."""
+    # graph.py's query oracles import this module when graph loads
+    from lake_satellite_image_etl_spark.operators.graph import _canon_edges
+
+    x, y = (F.col(c) for c in edges.columns[:2])
+    src = edges.schema[0]
     small = driver_components(
-        edges.select("src", "dst"),
+        edges.select(x, y),
         StructType(
             [
                 StructField("node", src.dataType, src.nullable),
@@ -1005,53 +1028,63 @@ def label_propagate_components(edges: DataFrame) -> DataFrame:
     )
     if small is not None:
         return small
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
+    # one checkpoint of the oriented rows, self-loops kept: the node
+    # set is read once, lazily, by the final labels join, and the loop
+    # starts from the loop-free edges
+    spans = (
+        edges.select(F.least(x, y).alias("lo"), F.greatest(x, y).alias("hi"))
         .distinct()
-        .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(CLUSTER_MAX_ROUNDS):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
+    nodes = (
+        spans.select(F.col("lo").alias("node"))
+        .union(spans.select(F.col("hi").alias("node")))
+        .distinct()
+    )
+    canon = spans.where(F.col("lo") != F.col("hi"))
+    # each round carries the count of the edge set it hands on, and
+    # asks exceptAll for emptiness (take-1 early exit), not a count
+    canon_cnt = canon.count()
+    for _ in range(STAR_MAX_ROUNDS):
+        # -- large-star: (hi, least(lo, min over N(lo))) ---------------
+        both = canon.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
+            canon.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("new_label"),
-                F.col("label").alias("old_label"),
-            )
-            .localCheckpoint(eager=True)
+        mins = both.groupBy("u").agg(F.min("v").alias("mv"))
+        large = canon.join(mins, canon["lo"] == mins["u"]).select(
+            F.col("hi").alias("x"), F.least("lo", "mv").alias("y")
         )
-        changed = new_labels.filter(
-            F.col("new_label") != F.col("old_label")
-        ).count()
-        labels = new_labels.select(
-            "node", F.col("new_label").alias("label")
-        )
-        if changed == 0:
+        canon_l = _canon_edges(large).localCheckpoint(eager=True)
+        # -- small-star: per hi, re-point {lo…} ∪ {hi} at min(lo) ------
+        mins_s = canon_l.groupBy("hi").agg(F.min("lo").alias("m"))
+        small_star = canon_l.join(mins_s, "hi").select(
+            F.col("lo").alias("x"), F.col("m").alias("y")
+        ).union(mins_s.select(F.col("hi").alias("x"), F.col("m").alias("y")))
+        canon_s = _canon_edges(small_star).localCheckpoint(eager=True)
+        # -- structural convergence: edge set unchanged ----------------
+        canon_s_cnt = canon_s.count()
+        stable = canon_s_cnt == canon_cnt and canon_s.exceptAll(canon).isEmpty()
+        canon, canon_cnt = canon_s, canon_s_cnt
+        if stable:
             break
     else:
-        # the cap is a runaway backstop, not an expected exit: a real
-        # component graph converges in O(diameter) rounds. Exiting
-        # here means labels are PARTIAL (split cluster ids) — make
-        # that observable instead of silently returning (ADVICE r3).
+        # the cap is a runaway backstop, not an expected exit: labels
+        # read off an unconverged edge set split components — make
+        # that observable instead of silently returning
         import warnings
 
         warnings.warn(
-            f"label_propagate_components: round cap "
-            f"({CLUSTER_MAX_ROUNDS}) exhausted with {changed} labels "
-            "still changing — component ids are not converged",
+            f"label_propagate_components: round cap ({STAR_MAX_ROUNDS}) "
+            "exhausted before the edge set stabilized — component ids "
+            "are not converged",
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels
+    # fixpoint = min-rooted stars: every canonical edge is (root, v)
+    roots = canon.groupBy("hi").agg(F.min("lo").alias("label"))
+    return nodes.join(roots, nodes["node"] == roots["hi"], "left").select(
+        "node", F.coalesce("label", "node").alias("label")
+    )
 
 
 @query(
@@ -1080,16 +1113,16 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest doc_id in its connected component (canonical doc = the one
     where doc_id == cluster_id).
 
-    Components come from min-label propagation iterated to convergence
-    (label_propagate_components above) — no fixed hop bound, so long
-    chains are assigned one cluster id; the DuckDB oracle is the full
+    Components come from label_propagate_components above, iterated
+    to its structural fixpoint — no fixed hop bound, so long chains
+    are assigned one cluster id; the DuckDB oracle is the full
     recursive-CTE transitive closure, the same fixpoint.
 
     Scale: the edge list comes from the already-bucketed MinHash join,
     never all-pairs. A graph of at most DRIVER_COMPONENTS_MAX_EDGES
     (2^17) edge rows costs one bounded Arrow collect and a driver
-    union-find; above that each round is one shuffle of (node, label)
-    joined against the checkpointed edge list."""
+    union-find; above that star contraction rewrites the checkpointed
+    edge set in O(log² n) rounds of a few shuffles each."""
     # bounded lazy persist (r16, guide §2.4): the symmetrizing union
     # references ``pairs`` twice, so the edge checkpoint inside
     # label_propagate_components was executing the ENTIRE MinHash
@@ -1925,7 +1958,7 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
        DRIVER_COMPONENTS_MAX_EDGES (2^17, measured as about one
        distributed round of driver work) edge rows is read in one
        bounded Arrow collect and finished by union-find on the driver;
-       a larger one runs min-label propagation to convergence;
+       a larger one runs star contraction to its fixpoint;
     5. canonical selection: every document maps through its exact rep
        to its cluster's minimum id; ``keep`` marks the one surviving
        copy per duplicate group.

@@ -1,7 +1,8 @@
 """Graph operators — weighted PageRank over a relationally-built
-graph (the join-per-superstep iterative pattern) and star-contraction
-connected components (the round-count-bounded alternative to
-dedup.py's label propagation).
+graph (the join-per-superstep iterative pattern), BFS, shortest paths,
+triangle counts and near-dup connected components. The components
+kernel itself is ``dedup.label_propagate_components`` (star
+contraction); this module owns the canonical edge set it rewrites.
 
 Exactness rule: ranks are SCALED INTEGERS and every transition is
 integer arithmetic (floor division), so eight supersteps produce
@@ -13,7 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from lake_satellite_image_etl_spark.caching import persist_bounded
 from lake_satellite_image_etl_spark.io import read_table
@@ -67,13 +67,6 @@ def _sql_pagerank() -> str:
     )
 
 
-#: round backstop for star contraction. The alternation provably
-#: converges in O(log² n) rounds (typically ≤ 6 on real graphs), so
-#: unlike label propagation's O(diameter) this cap is generous, not
-#: load-bearing.
-STAR_MAX_ROUNDS = 30
-
-
 def _canon_edges(df: DataFrame) -> DataFrame:
     """Canonical undirected edge set of (x, y) pairs: oriented
     (lo, hi), self-loops dropped, distinct."""
@@ -84,126 +77,6 @@ def _canon_edges(df: DataFrame) -> DataFrame:
         .where(F.col("lo") != F.col("hi"))
         .distinct()
     )
-
-
-def star_contract_components(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Connected components by LARGE-STAR / SMALL-STAR alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the round-count-bounded alternative to min-label
-    propagation (dedup.py::label_propagate_components).
-
-    ``edges`` is any (src, dst) pair DataFrame (direction and
-    duplicates irrelevant — canonicalized here). Returns
-    ``(labels, rounds)``: (node, label) with label = the component's
-    minimum node id, plus the number of alternation rounds used.
-
-    Each round rewrites the EDGE SET (no labels table to join):
-
-    - **large-star**: every directed pair (u, v) with v > u is
-      re-pointed at m(u) = min(N(u) ∪ {u}) — one groupBy over the
-      symmetrized pairs for the per-node min, one join back. Safe on
-      high-degree nodes: work is per-EDGE, never a per-node
-      neighborhood collect.
-    - **small-star**: every canonical (lo, hi) group keyed by hi
-      re-points its smaller neighbors (and hi itself) at
-      m(hi) = min(lo) — one groupBy + one join.
-
-    Both steps preserve connectivity and node sets; fixpoints are
-    exactly min-rooted stars, read off as (hi → lo) labels.
-
-    Scale shape vs label propagation: a round costs the same O(|E|)
-    shuffles, but the ROUND COUNT is O(log² n) instead of O(diameter)
-    — on a 100 TB near-dup graph whose chained clusters reach
-    diameters in the hundreds, that is the difference between ~6 and
-    ~600 shuffle stages. The edge set also SHRINKS as components
-    contract (distinct() after each rewrite), so later rounds get
-    cheaper; per-round ``localCheckpoint`` cuts the iterative
-    lineage exactly like the propagation loop. Convergence is
-    detected structurally (edge set unchanged under a round), so the
-    result is the true fixpoint, not a hop-bounded approximation.
-
-    A graph of at most ``dedup.DRIVER_COMPONENTS_MAX_EDGES`` non-loop
-    pair rows is finished on the driver instead, by the same bounded
-    collect and union-find as label propagation
-    (``dedup.driver_components``), and reports ``rounds = 0``."""
-    from lake_satellite_image_etl_spark.operators.dedup import (
-        driver_components,
-    )
-
-    xy = edges.select(F.col(edges.columns[0]).alias("x"), F.col(edges.columns[1]).alias("y"))
-    canon = _canon_edges(xy)
-    node = canon.schema["lo"]
-    small = driver_components(
-        xy.where(F.col("x") != F.col("y")),
-        StructType(
-            [
-                StructField("node", node.dataType, node.nullable),
-                StructField("label", node.dataType, True),
-            ]
-        ),
-    )
-    if small is not None:
-        return small, 0
-    canon = canon.localCheckpoint(eager=True)
-    # the node set is read exactly once, by the final labels join —
-    # keep it LAZY over the checkpointed initial edge set (r16: the
-    # former eager checkpoint here was one extra construction job +
-    # materialization for a single-consumer frame)
-    nodes = canon.select(F.col("lo").alias("node")).union(
-        canon.select(F.col("hi").alias("node"))
-    ).distinct()
-    # r16 convergence-check cost: the previous round already counted
-    # the edge set it hands to this round — carry that count instead
-    # of re-running canon.count() every round (one job per round
-    # saved), and ask exceptAll for EMPTINESS (take-1 early exit)
-    # rather than a full count.
-    canon_cnt = canon.count()
-    rounds = 0
-    for _ in range(STAR_MAX_ROUNDS):
-        rounds += 1
-        # -- large-star: (hi, least(lo, min over N(lo))) ---------------
-        both = canon.select(F.col("lo").alias("u"), F.col("hi").alias("v")).union(
-            canon.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        mins = both.groupBy("u").agg(F.min("v").alias("mv"))
-        large = canon.join(mins, canon["lo"] == mins["u"]).select(
-            F.col("hi").alias("x"), F.least("lo", "mv").alias("y")
-        )
-        canon_l = _canon_edges(large).localCheckpoint(eager=True)
-        # -- small-star: per hi, re-point {lo…} ∪ {hi} at min(lo) ------
-        mins_s = canon_l.groupBy("hi").agg(F.min("lo").alias("m"))
-        small = canon_l.join(mins_s, "hi").select(
-            F.col("lo").alias("x"), F.col("m").alias("y")
-        ).union(mins_s.select(F.col("hi").alias("x"), F.col("m").alias("y")))
-        canon_s = _canon_edges(small).localCheckpoint(eager=True)
-        # -- structural convergence: edge set unchanged ----------------
-        canon_s_cnt = canon_s.count()
-        if canon_s_cnt == canon_cnt and canon_s.exceptAll(canon).isEmpty():
-            canon = canon_s
-            break
-        canon = canon_s
-        canon_cnt = canon_s_cnt
-    else:
-        import warnings
-
-        warnings.warn(
-            f"star_contract_components: round cap ({STAR_MAX_ROUNDS}) "
-            "exhausted before the edge set stabilized — component ids "
-            "are not converged",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # fixpoint = min-rooted stars: every canonical edge is (root, v).
-    labels = (
-        nodes.join(
-            canon.select(F.col("hi").alias("node"), F.col("lo").alias("label")),
-            "node",
-            "left",
-        )
-        .groupBy("node")
-        .agg(F.min(F.coalesce("label", "node")).alias("label"))
-    )
-    return labels, rounds
 
 
 def _sql_components() -> str:
@@ -229,21 +102,22 @@ def _sql_components() -> str:
 
 @query("graph_components_star", oracle=_sql_components())
 def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster assignment by star contraction — same input
-    graph, output shape, and oracle as dedup_cluster_assign (the
-    recursive-CTE transitive closure), but computed with the
-    O(log²n)-round large-star/small-star alternation instead of
-    O(diameter)-round label propagation. Two independent Spark
-    algorithms hash-matching one oracle is the correctness statement;
-    the round-count advantage (the reason this exists at 100 TB) is
-    pinned in tests/test_graph_components.py on a long-chain graph."""
+    """Near-dup cluster assignment from the UN-SYMMETRIZED pair set —
+    same input graph, output shape, and oracle (the recursive-CTE
+    transitive closure) as dedup_cluster_assign, but the MinHash pairs
+    go to the components kernel (``dedup.label_propagate_components``,
+    star contraction) as (doc_a, doc_b) rows only: the kernel
+    canonicalizes orientation itself, so no symmetrizing union (and no
+    persist to keep that union from running the pair pipeline twice)
+    is needed. The kernel's O(log² n) round bound is pinned in
+    tests/test_graph_components.py on a long-chain graph."""
     from lake_satellite_image_etl_spark.operators.dedup import (
         dedup_minhash_lsh,
+        label_propagate_components,
     )
 
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _ = star_contract_components(pairs)
-    return labels.select(
+    return label_propagate_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )
 
@@ -513,13 +387,14 @@ def bfs_distances(
     Pregel BFS expressed relationally. Only the FRONTIER is eagerly
     localCheckpointed per round (it feeds the join, the union AND the
     next anti-join — without the cut Spark re-derives the whole
-    prefix three times per round, the same lineage trap
-    ``star_contract_components`` documents); the visited set stays a
-    lazy union OF those checkpoints, so it costs no extra
-    materialization. The loop exits as soon as a frontier comes back
-    EMPTY (structural convergence, as ``graph_components_star``
-    does) — the checkpoint has already materialized it, so the check
-    is a scan of stored partitions, not a recompute; remaining
+    prefix three times per round, the same lineage trap the
+    components kernel, ``dedup.label_propagate_components``,
+    documents); the visited set stays a lazy union OF those
+    checkpoints, so it costs no extra materialization. The loop exits
+    as soon as a frontier comes back EMPTY (structural convergence,
+    as the components kernel does) — the checkpoint has already
+    materialized it, so the check is a scan of stored partitions, not
+    a recompute; remaining
     supersteps would each still pay a join against the edge set for
     a provably empty result. Level-synchronous visiting makes
     first-found == minimum distance, which is what the oracle's

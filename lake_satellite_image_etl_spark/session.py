@@ -54,7 +54,9 @@ import zipimport
 
 from pyspark.sql import SparkSession
 
-_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+#: local core count (``$SPARK_GRAFT_CPUS``, 32 when unset): the default
+#: ``local[N]`` master and shuffle-partition count
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 #: compiled classes Spark's generated-code cache keeps (static conf
 #: ``spark.sql.codegen.cache.maxEntries``), measured with two passes over
@@ -74,8 +76,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession."""
-    master = master or f"local[{_DEF_CPUS}]"
-    shuffle_partitions = shuffle_partitions or int(_DEF_CPUS)
+    master = master or f"local[{DEFAULT_CPUS}]"
+    shuffle_partitions = shuffle_partitions or int(DEFAULT_CPUS)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -1,8 +1,10 @@
-"""Convergence tests for the label-propagation connected-components
-pass behind dedup_cluster_assign (VERDICT r2 flagged the old fixed
-4-hop bound: diameter > 4 components got split cluster ids), and for
-the driver path that finishes graphs of at most
-``DRIVER_COMPONENTS_MAX_EDGES`` edge rows by union-find.
+"""Tests of the connected-components kernel behind
+dedup_cluster_assign, pipeline_corpus_dedup and graph_components_star
+(``dedup.label_propagate_components``): the distributed
+star-contraction loop converges to the min-label fixpoint (a fixed
+4-hop bound once split diameter > 4 components), and the driver path
+that finishes graphs of at most ``DRIVER_COMPONENTS_MAX_EDGES`` edge
+rows by union-find returns the loop's rows and schema.
 
 Tests of the distributed loop set the bound to 0, so their graphs do
 not take the driver path."""
@@ -63,18 +65,18 @@ def test_two_components_and_reversed_chain(spark):
 
 
 def test_round_cap_exhaustion_warns(spark, monkeypatch):
-    """Exiting via CLUSTER_MAX_ROUNDS with labels still moving must be
-    observable, not silent (ADVICE r3): cap a diameter-6 chain at 2
-    rounds and expect the non-convergence RuntimeWarning."""
+    """Exiting via STAR_MAX_ROUNDS before the edge set stabilizes must
+    be observable, not silent: cap a 40-node chain at 1 round and
+    expect the non-convergence RuntimeWarning."""
     import warnings
 
     from lake_satellite_image_etl_spark.operators import dedup
 
     _loop_only(monkeypatch)
-    monkeypatch.setattr(dedup, "CLUSTER_MAX_ROUNDS", 2)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", 1)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        _components(spark, [(i, i + 1) for i in range(1, 7)])
+        _components(spark, [(i, i + 1) for i in range(1, 40)])
     assert any(
         issubclass(w.category, RuntimeWarning)
         and "not converged" in str(w.message)
@@ -88,11 +90,22 @@ def _random_pairs(seed, n=60):
     return pairs + [(b, a) for a, b in pairs[: n // 4]]
 
 
-#: the 64-node chain needs 63 propagation rounds, above the loop's
-#: cap of 50; the star kernel's tests compare it
+def _loop_free_random_graphs(seed=7, n=60):
+    rng = random.Random(seed)
+    for _ in range(3):
+        pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(n)]
+        pairs += [(b, a) for a, b in pairs[: n // 4]]
+        yield [p for p in pairs if p[0] != p[1]]
+
+
+#: random graphs with self-loops, duplicate and reversed edges, their
+#: loop-free variants, long chains (chain64 needs 63 min-label
+#: propagation rounds) and the degenerate shapes
 _GRAPHS = {
     **{f"random{s}": _random_pairs(s) for s in (7, 8)},
+    **{f"random7_{i}": g for i, g in enumerate(_loop_free_random_graphs())},
     "chain16": [(i, i + 1) for i in range(1, 16)],
+    "chain64": [(i, i + 1) for i in range(1, 64)],
     "two_components": [(12, 11), (11, 10), (10, 9), (20, 21), (21, 22)],
     "empty": [],
 }
@@ -101,21 +114,39 @@ _GRAPHS = {
 @pytest.mark.parametrize("ddl", ["src long, dst long", "src int, dst int"])
 @pytest.mark.parametrize("graph", sorted(_GRAPHS))
 def test_driver_path_equals_loop(spark, monkeypatch, graph, ddl):
-    """The driver path returns the loop's rows and schema. The random
-    graphs hold self-loops and duplicate edges. A bound of -1 sends
-    even the empty graph (0 rows, at most a bound of 0) to the loop."""
+    """The loop returns the driver path's union-find rows and schema
+    on un-symmetrized input. Every graph gets a (99, 99) self-loop,
+    which both paths keep as 99 → 99."""
     from lake_satellite_image_etl_spark.operators.dedup import (
         label_propagate_components,
     )
 
-    edges = _edges(spark, _GRAPHS[graph], ddl)
-    fast = label_propagate_components(edges)
+    pairs = spark.createDataFrame(_GRAPHS[graph] + [(99, 99)], ddl)
+    fast = label_propagate_components(pairs)
     assert "LocalTableScan" in _plan(fast)
-    _loop_only(monkeypatch, -1 if graph == "empty" else 0)
-    loop = label_propagate_components(edges)
+    _loop_only(monkeypatch)
+    loop = label_propagate_components(pairs)
     assert "LocalTableScan" not in _plan(loop)
     assert fast.schema == loop.schema
-    assert sorted(fast.collect()) == sorted(loop.collect())
+    rows = sorted(fast.collect())
+    assert sorted(loop.collect()) == rows
+    assert (99, 99) in {tuple(r) for r in rows}
+
+
+def test_empty_graph_on_loop_path(spark, monkeypatch):
+    """A bound of -1 sends even the empty graph (0 rows, at most a
+    bound of 0) to the loop, which returns no rows in the driver
+    path's schema."""
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        label_propagate_components,
+    )
+
+    pairs = spark.createDataFrame([], "src int, dst int")
+    fast = label_propagate_components(pairs)
+    _loop_only(monkeypatch, -1)
+    loop = label_propagate_components(pairs)
+    assert loop.schema == fast.schema
+    assert loop.collect() == []
 
 
 @pytest.mark.parametrize("n_rows, driver", [(4, True), (5, False)])

@@ -71,16 +71,16 @@ CONSTRUCTION_JOB_ALLOWLIST: dict[str, str] = {
     # (N = dedup.DRIVER_COMPONENTS_MAX_EDGES: a near-dup graph of at
     #  most N edge rows is finished on the driver after one collect)
     "dedup_cluster_assign": "iterative: one bounded edge collect, with "
-    "the distributed label-propagation rounds above N",
+    "the distributed star-contraction rounds above N",
     "dedup_canonical_keep": "iterative: composes dedup_cluster_assign's "
-    "one bounded edge collect, with the distributed label-propagation "
+    "one bounded edge collect, with the distributed star-contraction "
     "rounds above N",
     "sample_cluster_safe_split": "iterative: composes "
     "dedup_cluster_assign's one bounded edge collect, with the "
-    "distributed label-propagation rounds above N",
+    "distributed star-contraction rounds above N",
     "pipeline_corpus_dedup": "iterative: label_propagate_components' "
     "one bounded edge collect over the survivors' MinHash pair edges, "
-    "with the distributed rounds above N",
+    "with the distributed star-contraction rounds above N",
     # -- mechanics: streaming runners / external round-trips --
     "stream_cdc_batch": "mechanics: AvailableNow micro-batch executes",
     "stream_dedup_batch": "mechanics: AvailableNow micro-batch executes",

@@ -1,125 +1,141 @@
-"""Star-contraction connected components (operators/graph.py):
-equivalence with label propagation, the O(log²n) round-count
-advantage on long chains (its reason to exist at 100 TB), and
-structural-fixpoint properties. Tests of the distributed loops set
-``DRIVER_COMPONENTS_MAX_EDGES`` to 0, so their graphs do not take the
-driver path."""
+"""Graph operator tests: the components kernel's O(log² n) round
+bound on long chains and min-rooted stars (its reason to exist at
+100 TB), its un-symmetrized-input contract, its loop path against the
+DuckDB oracles, and triangle counts, BFS and Bellman-Ford. Tests of
+the distributed components loop set ``DRIVER_COMPONENTS_MAX_EDGES``
+to 0, so their graphs do not take the driver path."""
 
 from __future__ import annotations
 
-import random
+import warnings
 
 import pytest
 
-from tests.test_cluster import _GRAPHS, _components, _loop_only, _plan
+from tests.test_cluster import _loop_only
 
 
-def _star(spark, undirected_pairs):
-    from lake_satellite_image_etl_spark.operators.graph import (
-        star_contract_components,
+def _labels(spark, undirected_pairs):
+    """(node → label) of un-symmetrized pairs; an exhausted round cap
+    (its RuntimeWarning) fails the test."""
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        label_propagate_components,
     )
 
     pairs = spark.createDataFrame(undirected_pairs, "src long, dst long")
-    labels, rounds = star_contract_components(pairs)
-    return {r["node"]: r["label"] for r in labels.collect()}, rounds
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        labels = label_propagate_components(pairs)
+    return {r["node"]: r["label"] for r in labels.collect()}
+
+
+def _loop_capped(monkeypatch, rounds):
+    from lake_satellite_image_etl_spark.operators import dedup
+
+    _loop_only(monkeypatch)
+    monkeypatch.setattr(dedup, "STAR_MAX_ROUNDS", rounds)
 
 
 def test_chain_converges_in_logarithmic_rounds(spark, monkeypatch):
-    """A 64-node chain (diameter 63) needs ~63 propagation rounds; star
-    contraction must land the same single min-rooted component in
-    O(log²n) alternations — pinned at ≤ 10."""
-    _loop_only(monkeypatch)
+    """A 64-node chain (diameter 63) needs 63 min-label propagation
+    rounds; star contraction must land the same single min-rooted
+    component in O(log²n) alternations — pinned by a cap of 10 rounds
+    that must not be exhausted."""
+    _loop_capped(monkeypatch, 10)
     chain = [(i, i + 1) for i in range(1, 64)]
-    labels, rounds = _star(spark, chain)
+    labels = _labels(spark, chain)
     assert labels == {n: 1 for n in range(1, 65)}
-    assert rounds <= 10, f"star contraction took {rounds} rounds on a chain"
-
-
-def _random_graphs():
-    rng = random.Random(7)
-    for _ in range(3):
-        n = 60
-        pairs = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(n)
-        ]  # includes self-loops / dups / reversed duplicates
-        pairs += [(b, a) for a, b in pairs[: n // 4]]
-        yield [p for p in pairs if p[0] != p[1]]
-
-
-def test_components_match_label_propagation_on_random_graphs(spark, monkeypatch):
-    """Two independent algorithms, identical fixpoint: random sparse
-    graphs (dup edges, self loops, both orientations, singleton-free
-    by construction) must agree node-for-node."""
-    _loop_only(monkeypatch)
-    for trial, pairs in enumerate(_random_graphs()):
-        star_labels, _ = _star(spark, pairs)
-        prop_labels = _components(spark, pairs)
-        assert star_labels == prop_labels, f"trial {trial} diverged"
 
 
 def test_two_components_and_orientation_independence(spark):
     """Direction of the input pairs must not matter, and separate
     components keep separate min labels."""
     pairs = [(12, 11), (11, 10), (10, 9)] + [(20, 21), (21, 22)]
-    labels, _ = _star(spark, pairs)
+    labels = _labels(spark, pairs)
     assert labels == {9: 9, 10: 9, 11: 9, 12: 9, 20: 20, 21: 20, 22: 20}
 
 
 def test_star_input_is_immediate_fixpoint(spark, monkeypatch):
     """A min-rooted star is a fixpoint of both operations: one round
-    to observe stability, then out."""
-    _loop_only(monkeypatch)
+    to observe stability, so a cap of 2 rounds is not exhausted."""
+    _loop_capped(monkeypatch, 2)
     star = [(1, k) for k in range(2, 12)]
-    labels, rounds = _star(spark, star)
+    labels = _labels(spark, star)
     assert labels == {n: 1 for n in range(1, 12)}
-    assert rounds <= 2
 
 
 def test_round_cap_exhaustion_warns(spark, monkeypatch):
-    """Exiting via STAR_MAX_ROUNDS before the edge set stabilizes must
-    raise the RuntimeWarning, mirroring label propagation's contract."""
-    import warnings
+    """An exhausted STAR_MAX_ROUNDS on un-symmetrized input warns, and
+    the unconverged result is still one row per node with a label no
+    larger than the node (a split component, never a lost node)."""
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        label_propagate_components,
+    )
 
-    from lake_satellite_image_etl_spark.operators import graph
-
-    _loop_only(monkeypatch)
-    monkeypatch.setattr(graph, "STAR_MAX_ROUNDS", 1)
+    _loop_capped(monkeypatch, 1)
+    chain = [(i + 1, i) for i in range(1, 40)]
+    pairs = spark.createDataFrame(chain, "src long, dst long")
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        _star(spark, [(i, i + 1) for i in range(1, 40)])
+        rows = label_propagate_components(pairs).collect()
     assert any(
         issubclass(w.category, RuntimeWarning)
         and "not converged" in str(w.message)
         for w in caught
     )
+    assert sorted(r["node"] for r in rows) == list(range(1, 41))
+    assert all(r["label"] <= r["node"] for r in rows)
 
 
+#: graph → (un-symmetrized pairs, expected labels without the (99, 99)
+#: self-loop every case adds)
 _STAR_GRAPHS = {
-    **{f"random7_{i}": g for i, g in enumerate(_random_graphs())},
-    "chain64": [(i, i + 1) for i in range(1, 64)],
-    "two_components": _GRAPHS["two_components"],
-    "empty": [],
+    "two_components": (
+        [(12, 11), (11, 10), (10, 9), (20, 21), (21, 22)],
+        {9: 9, 10: 9, 11: 9, 12: 9, 20: 20, 21: 20, 22: 20},
+    ),
+    "empty": ([], {}),
 }
 
 
 @pytest.mark.parametrize("ddl", ["src long, dst long", "src int, dst int"])
 @pytest.mark.parametrize("graph", sorted(_STAR_GRAPHS))
 def test_star_driver_path_equals_loop(spark, monkeypatch, graph, ddl):
-    """The driver path returns the star loop's rows and schema, and
-    reports 0 rounds; self-loops are dropped on both paths. A bound of
-    -1 sends even the empty graph to the loop."""
-    from lake_satellite_image_etl_spark.operators.graph import (
-        star_contract_components,
+    """Both paths give the same rows and schema on pairs in reversed
+    orientation, and those rows are the expected min labels: a node
+    seen only in a self-loop labels itself (99 → 99), also when the
+    self-loop is the whole graph."""
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        label_propagate_components,
     )
 
-    pairs = spark.createDataFrame(_STAR_GRAPHS[graph] + [(99, 99)], ddl)
-    fast, fast_rounds = star_contract_components(pairs)
-    assert fast_rounds == 0 and "LocalTableScan" in _plan(fast)
-    _loop_only(monkeypatch, -1 if graph == "empty" else 0)
-    loop, loop_rounds = star_contract_components(pairs)
-    assert loop_rounds >= 1
+    pairs, expected = _STAR_GRAPHS[graph]
+    frame = spark.createDataFrame([(b, a) for a, b in pairs] + [(99, 99)], ddl)
+    fast = label_propagate_components(frame)
+    _loop_only(monkeypatch)
+    loop = label_propagate_components(frame)
     assert fast.schema == loop.schema
-    assert sorted(fast.collect()) == sorted(loop.collect())
+    rows = sorted(fast.collect())
+    assert sorted(loop.collect()) == rows
+    assert {r["node"]: r["label"] for r in rows} == {**expected, 99: 99}
+
+
+@pytest.mark.parametrize("name",["dedup_cluster_assign", "graph_components_star"])
+def test_components_loop_path_matches_oracle(spark, monkeypatch, name):
+    """With the driver path off, both components queries still
+    hash-match their recursive-CTE oracles on sf0.001 — the gate's
+    fixtures are small enough that they otherwise only take the
+    driver path."""
+    from lake_satellite_image_etl_spark.registry import load_all
+    from tests.conftest import SF_SMOKE
+    from tools.compare import compare_frames, duckdb_con
+
+    _loop_only(monkeypatch)
+    queries, oracles = load_all()
+    spark_pdf = queries[name](spark, SF_SMOKE).toPandas()
+    assert len(spark_pdf) >= 2  # at least one near-dup pair
+    oracle_pdf = duckdb_con(SF_SMOKE).execute(oracles[name]).fetchdf()
+    res = compare_frames(name, spark_pdf, oracle_pdf)
+    assert res.ok, res.detail
 
 
 # ---------------- triangle counting ------------------------------------
