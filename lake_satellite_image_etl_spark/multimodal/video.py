@@ -120,12 +120,20 @@ def video_frame_features(videos: DataFrame, every: int = SAMPLE_EVERY) -> DataFr
     return videos.mapInPandas(feats, schema=VIDEO_FRAME_SCHEMA)
 
 
-def with_videos(spark: SparkSession, sf_dir: str, max_id: int = 30) -> DataFrame:
-    """One synthetic clip per supplier row (bounded) — the opaque
-    binary column a real pipeline would read from object storage."""
+def with_videos(
+    spark: SparkSession,
+    sf_dir: str,
+    max_id: int = 30,
+    table: str = "supplier",
+    key: str = "s_suppkey",
+) -> DataFrame:
+    """One synthetic clip per ``table`` row with ``key`` ≤ ``max_id`` —
+    the opaque binary column a real pipeline would read from object
+    storage. Each query reads the table its oracle's ``ids`` reads: at
+    sf0.001 ``supplier`` holds 10 rows and ``part`` 200."""
     ids = (
-        read_table(spark, sf_dir, "supplier")
-        .select(F.col("s_suppkey").cast("long").alias("entity_id"))
+        read_table(spark, sf_dir, table)
+        .select(F.col(key).cast("long").alias("entity_id"))
         .filter(F.col("entity_id") <= max_id)
     )
 
@@ -316,7 +324,9 @@ def multimodal_video_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     islands) and multimodal_image_tiles (patchify): same plumbing —
     opaque binary column, vectorized Arrow kernel, no shuffle, full
     oracle."""
-    return video_shot_segments(with_videos(spark, sf_dir))
+    return video_shot_segments(
+        with_videos(spark, sf_dir, table="part", key="p_partkey")
+    )
 
 
 @query(

@@ -27,7 +27,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from lake_satellite_image_etl_spark.functions.text import (
     _SQL_TOKS,
@@ -97,26 +97,81 @@ MINHASH_A = [_minhash_coeff(i, "a") for i in range(MINHASH_K)]
 MINHASH_B = [_minhash_coeff(i, "b") for i in range(MINHASH_K)]
 
 
-def minhash_sig_from_hashes(hsh):
-    """MinHash signature via k universal linear permutations over ONE
-    base hash per shingle: base = 60-bit shingle hash mod P,
-    h_i = (a_i·base + b_i) mod P, sig_i = min over shingles.
+def minhash_band_keys(hsh: pa.Array) -> pa.Array:
+    """MinHash signature → packed LSH band keys for one Arrow batch of
+    hashed shingle sets: list<int64> in, list<int64> of LSH_BANDS keys
+    per row out.
 
-    One md5 per shingle instead of k — the signature stage is the hot
-    loop of corpus dedup, and this is the textbook way to make k
-    permutations cost k multiply-adds, not k cryptographic hashes."""
-    a_arr = F.array(*[F.lit(a).cast("long") for a in MINHASH_A])
-    b_arr = F.array(*[F.lit(b).cast("long") for b in MINHASH_B])
-    bases = F.transform(hsh, lambda h: h % MINHASH_P)
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(MINHASH_K)),
-        lambda i: F.array_min(
-            F.transform(
-                bases,
-                lambda x: (F.element_at(a_arr, i) * x + F.element_at(b_arr, i))
-                % MINHASH_P,
-            )
+    The signature uses k universal linear permutations over ONE base
+    hash per shingle: base = shingle hash mod P, h_i = (a_i·base + b_i)
+    mod P, sig_i = min over shingles. One md5 per shingle instead of k
+    is the textbook way to make k permutations cost k multiply-adds,
+    not k cryptographic hashes. Band key j packs its band's two values
+    as sig_{2j}·P + sig_{2j+1} (both < P, so the key is collision-free
+    and < P² ≈ 1e18).
+
+    This is the hot loop of corpus dedup, so it runs as int64 numpy
+    over the whole batch: k passes over the flat hash array, each a
+    multiply-add and one ``minimum.reduceat``, where a Catalyst
+    higher-order function evaluates k·|shingles| lambdas per row,
+    uncompiled. ``np.fmod`` truncates toward zero like Spark's and
+    DuckDB's ``%``, and |a·x + b| < P² < 2^63, so every key is
+    bit-identical to the oracle's. A NULL or empty set, or one of NULL
+    hashes only, gets LSH_BANDS NULL keys: SQL's min over nothing."""
+    import numpy as np
+
+    n = len(hsh)
+    offsets = np.asarray(hsh.offsets, dtype=np.int64)
+    # a sliced list array's values ignore the slice: take the slice's
+    # own span, so the last segment ends at the last offset
+    vals = hsh.values.slice(offsets[0], offsets[-1] - offsets[0])
+    starts = offsets[:-1] - offsets[0]
+    base = np.fmod(np.asarray(vals.fill_null(0), dtype=np.int64), MINHASH_P)
+    null_hash = np.asarray(vals.is_null()) if vals.null_count else None
+    none = np.iinfo(np.int64).max  # above every h_i: marks "no value"
+    sig = np.full((MINHASH_K, n), none, dtype=np.int64)
+    # reduceat cannot express zero-length segments, so run it over the
+    # nonempty rows only: their starts partition the span exactly
+    nonempty = np.flatnonzero(np.diff(offsets) > 0)
+    for i in range(MINHASH_K):
+        h = np.fmod(MINHASH_A[i] * base + MINHASH_B[i], MINHASH_P)
+        if null_hash is not None:
+            h[null_hash] = none  # array_min skips NULL elements
+        sig[i, nonempty] = np.minimum.reduceat(h, starts[nonempty])
+    null = sig[0] == none
+    if hsh.null_count:
+        null |= np.asarray(hsh.is_null())
+    sig[:, null] = 0
+    keys = sig[0::LSH_ROWS] * MINHASH_P + sig[1::LSH_ROWS]  # (bands, n)
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * LSH_BANDS, LSH_BANDS, dtype=np.int32)),
+        pa.array(keys.T.reshape(-1), mask=np.repeat(null, LSH_BANDS)),
+    )
+
+
+def _minhash_band_batches(batches):
+    """``minhash_bands``' kernel: (doc_id, hsh) batches gain their
+    ``band_keys``; both input columns pass through unchanged."""
+    for rb in batches:
+        yield pa.RecordBatch.from_arrays(
+            [*rb.columns, minhash_band_keys(rb.column(1))],
+            names=[*rb.schema.names, "band_keys"],
+        )
+
+
+def minhash_bands(sh: DataFrame) -> DataFrame:
+    """(doc_id, hsh) → (doc_id, hsh, band, band_key), LSH_BANDS rows
+    per document: the band keys come from one Arrow-batch numpy pass
+    (``minhash_band_keys``), and ``posexplode`` numbers the bands."""
+    sh = sh.select("doc_id", "hsh")
+    keyed = sh.mapInArrow(
+        _minhash_band_batches,
+        StructType(
+            [*sh.schema.fields, StructField("band_keys", ArrayType(LongType()))]
         ),
+    )
+    return keyed.select(
+        "doc_id", "hsh", F.posexplode("band_keys").alias("band", "band_key")
     )
 
 
@@ -208,13 +263,15 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     band keys → per-bucket pair expansion → exact Jaccard ≥ 0.8 on
     long arrays.
 
-    Plan shape: signatures are computed ONCE — candidates come from a
-    groupBy(band_key) + in-bucket pair expansion carrying the hashed
-    shingle sets as struct members, so nothing in the lineage is
-    re-evaluated by a self-join. The shuffle is keyed by (band,
-    band_key) — uniform hash values, no skew. Trade-off vs the
-    self-join form: members duplicate their shingle-hash array per
-    band (6× shuffle volume of one int array per doc) — at 100 TB
+    Plan shape: signatures and band keys are computed ONCE, in one
+    Arrow-batch numpy pass (``minhash_bands``' ``MapInArrow``) —
+    candidates come from a groupBy(band_key) + in-bucket pair
+    expansion carrying the hashed shingle sets as struct members, so
+    nothing in the lineage is re-evaluated by a self-join. The
+    shuffle is keyed by (band, band_key) — uniform hash values, no
+    skew. Trade-off vs the self-join form: members duplicate their
+    shingle-hash array per band (6× shuffle volume of one int array
+    per doc) — at 100 TB
     you persist the signature table once and verify-join against it
     instead; the candidate logic is identical.
 
@@ -238,7 +295,10 @@ def minhash_pairs(
     ``min_jaccard=None`` returns EVERY banded candidate with its
     unrounded exact jaccard — the dq_dedup_recall_eval harness needs
     the pre-verification candidate set to measure banding recall.
-    ``sh`` (r16) optionally supplies a prebuilt (doc_id, hsh)
+    The band keys come from ``minhash_bands``: shingling and md5 stay
+    JVM builtins, and only the signature (k multiply-add-mod-min
+    passes per shingle set) runs as int64 numpy per Arrow batch.
+    ``sh`` optionally supplies a prebuilt (doc_id, hsh)
     hashed-shingle frame — callers that already materialize the
     identical shingle table (the recall eval persists it for its
     truth side) pass it in so the tokenize→shingle→md5 chain runs
@@ -248,23 +308,8 @@ def minhash_pairs(
         sh = docs.withColumn("_toks", tokens_of(F.col("text"))).select(
             "doc_id", hashed_shingles(F.col("_toks")).alias("hsh")
         )
-    sig = sh.select(
-        "doc_id",
-        "hsh",
-        minhash_sig_from_hashes(F.col("hsh")).alias("sig"),
-    )
-    # band key = the band's 2 minhash values packed into one bigint
-    # (both < P, so v₁·P + v₂ < P² ≈ 1e18 is collision-free and exact).
-    bands = sig.select(
-        F.struct("doc_id", "hsh").alias("m"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                lambda band: F.element_at("sig", band * LSH_ROWS + 1)
-                * F.lit(MINHASH_P).cast("long")
-                + F.element_at("sig", band * LSH_ROWS + 2),
-            )
-        ).alias("band", "band_key"),
+    bands = minhash_bands(sh).select(
+        F.struct("doc_id", "hsh").alias("m"), "band", "band_key"
     )
     pairs = (
         bands.groupBy("band", "band_key")
@@ -402,9 +447,9 @@ def simhash_numpy(hash_lists):
 #: COALESCE on the inner fold: DuckDB's list_sum([]) is NULL, which
 #: would zero every bit of an empty-hashes doc, while the HOF spec /
 #: numpy fold gives sum 0 ⇒ (0 >= 0) ⇒ all 60 bits set — coalescing
-#: to 0 makes the oracle match the spec on that edge exactly
-#: (ADVICE r6; fixture-unreachable — '' tokenizes to [''] — but the
-#: documented equivalence should not depend on that).
+#: to 0 makes the oracle match the spec on that edge exactly (it is
+#: fixture-unreachable — '' tokenizes to [''] — but the documented
+#: equivalence should not depend on that).
 _SQL_SIMHASH = f"""list_sum(list_transform(generate_series(0, {SIMHASH_BITS - 1}),
     b -> CASE WHEN COALESCE(list_sum(list_transform(hashes,
             h -> CASE WHEN (h & (1::BIGINT << b)) != 0
@@ -486,21 +531,21 @@ def simhash_pairs(
             f"{n_bands} (band_bits={band_bits}) — shrink band_bits"
         )
     # The fingerprint table is two longs per doc — persist it
-    # (bounded lazy registry, r13) so the band self-join doesn't
+    # (bounded lazy registry) so the band self-join doesn't
     # re-evaluate the 60-bit fingerprint lineage on both sides while
     # construction stays JOBLESS (an eager localCheckpoint billed a
     # job to every plan-only construction — the allowlist row this
     # removes); the registry's recency bound + release_all() covers
     # the shared-session storage-leak concern that ruled out bare
-    # cache() (ADVICE r2). The self-join (NOT a per-bucket
+    # cache(). The self-join (NOT a per-bucket
     # pair expansion) is deliberate: SimHash bands of near-identical
     # docs are heavily SKEWED (measured: hottest band bucket holds 27%
     # of docs at sf0.1), and a collect_list-based expansion would build
     # O(bucket²) structs in single rows — the join form keeps rows
     # tiny and lets AQE skew-splitting spread the hot buckets.
     # NULL text ⇒ NULL hashes ⇒ the doc is dropped, and the oracle
-    # filters `hashes IS NOT NULL` symmetrically (ADVICE r6: it used
-    # to rely on a NULL band_key falling out of the equi-join, which
+    # filters `hashes IS NOT NULL` symmetrically (it used to rely on
+    # a NULL band_key falling out of the equi-join, which
     # gave a NULL-text doc simhash 0 instead of dropping it); the
     # empty-hashes edge is aligned via COALESCE in _SQL_SIMHASH.
     hs = docs.select(
@@ -580,9 +625,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle keeps the naive formulation as independent proof)."""
     docs = read_table(spark, sf_dir, "documents")
     # feeds df-stats, prefix build, and the verify join — bounded
-    # lazy persist (r13: jobless construction; registry recency bound
-    # + release_all() covers the shared-session storage concern that
-    # ruled out bare cache(), ADVICE r2).
+    # lazy persist (jobless construction; the registry's recency
+    # bound + release_all() cover the shared-session storage concern
+    # that rules out bare cache()).
     sh = persist_bounded(
         docs.withColumn("_toks", tokens_of(F.col("text"))).select(
             "doc_id",
@@ -619,7 +664,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # renamed projections defeat exchange reuse (the executed plan
     # showed zero ReusedExchange and the whole explode → df join →
     # collect_list aggregation chain running twice) — bounded lazy
-    # persist computes the prefix table once per action (r17, §2.4)
+    # persist computes the prefix table once per action
     prefixes = persist_bounded(
         ordered.select(
             "doc_id",
@@ -726,7 +771,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the df-cap is the bucket-size filter, after which every bucket
     # expands to at most C({CONTAIN_DF_CAP},2) pairs as an in-memory
     # HOF (pair_combos) — no index self-join, no second pass over the
-    # explode. Bounded lazy persist (r13: jobless construction): the
+    # explode. Bounded lazy persist (jobless construction): the
     # buckets feed both the pair expansion and the per-doc size table.
     buckets = persist_bounded(
         ex.groupBy("s")
@@ -736,7 +781,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes is referenced twice (the lo and hi sides of the directed
     # join), and Catalyst recomputes non-exchange subtrees per
     # reference — without the persist the Σ df posting-mass explode +
-    # per-doc count ran twice per action (r17, guide §2.4)
+    # per-doc count ran twice per action
     sizes = persist_bounded(
         buckets.select(F.explode("m").alias("doc_id"))
         .groupBy("doc_id")
@@ -931,7 +976,12 @@ def driver_components(pairs: DataFrame, schema: StructType) -> DataFrame | None:
     component's minimum id, and the result, one (node, label) row per
     endpoint, is returned with ``schema`` as a local relation. It is
     built from an Arrow table, not from Python rows, so it plans as a
-    ``LocalTableScan`` and no Python worker reads it."""
+    ``LocalTableScan`` and no Python worker reads it.
+
+    Pass ``pairs`` un-symmetrized where the caller can: over a union,
+    Spark pushes the limit into each branch as a whole-stage-compiled
+    local limit whose source names a process-wide counter, so every
+    call compiles those classes again (5-15 ms each)."""
     table = pairs.limit(DRIVER_COMPONENTS_MAX_EDGES + 1).toArrow()
     if table.num_rows > DRIVER_COMPONENTS_MAX_EDGES or any(
         c.null_count for c in table.columns
@@ -1123,7 +1173,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2^17) edge rows costs one bounded Arrow collect and a driver
     union-find; above that star contraction rewrites the checkpointed
     edge set in O(log² n) rounds of a few shuffles each."""
-    # bounded lazy persist (r16, guide §2.4): the symmetrizing union
+    # bounded lazy persist: the symmetrizing union
     # references ``pairs`` twice, so the edge checkpoint inside
     # label_propagate_components was executing the ENTIRE MinHash
     # pipeline (shingle → signature → banding → verify) twice.
@@ -1214,9 +1264,9 @@ def _sql_dedup_recall_oracle(sample_den: int | None = None) -> str:
     denominator so the full entry and its ``_sampled`` sibling share
     one SQL body and can never drift (same pattern as
     similarity.py::_sql_knn_recall_oracle). ``sample_den=None``
-    produces the full-corpus string BYTE-IDENTICAL to the r14
-    registered form (md5-checked at refactor time). The predicate
-    lands on ``doc_a`` — the lower id, the canonical pair
+    produces the full-corpus string BYTE-IDENTICAL to the form
+    registered before the split (md5-checked at refactor time). The
+    predicate lands on ``doc_a`` — the lower id, the canonical pair
     orientation both the truth and candidate sides share — inside
     each pair join, exactly the population the Spark path keeps by
     filtering the probe docs before the explode (truth) and the
@@ -1314,13 +1364,13 @@ def dq_dedup_recall_eval(
     sides stay relational: inverted-index equi-join + per-pair
     aggregate, never an all-pairs product.
 
-    ``eval_sample_den`` (VERDICT r13 item 5 — the "runs on a SAMPLE"
-    promise above as a code path, same contract as the ANN/kNN
-    harnesses): when set, the eval measures recall/precision over
-    the pairs whose LOWER doc_id (``doc_a`` — the canonical pair
-    orientation both sides share) falls in the ~1/den deterministic
-    md5 sample (``eval_sample_pred``). The predicate lands on the
-    probe side of the inverted-index join BEFORE the explode, so the
+    ``eval_sample_den`` (the "runs on a SAMPLE" promise above as a
+    code path, same contract as the ANN/kNN harnesses): when set, the
+    eval measures recall/precision over the pairs whose LOWER doc_id
+    (``doc_a`` — the canonical pair orientation both sides share)
+    falls in the ~1/den deterministic md5 sample
+    (``eval_sample_pred``). The predicate lands on the probe side of
+    the inverted-index join BEFORE the explode, so the
     Σ df·(df−1)/2 ground-truth pair work — the term the 10×-docs
     smoke measured growing 39.9× — shrinks ∝ the sample; the
     candidate side is the production banded kernel unchanged,
@@ -1333,7 +1383,7 @@ def dq_dedup_recall_eval(
     )
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # bounded lazy persists (r16, guide §2.3/§2.4): the hashed-shingle
+    # bounded lazy persists: the hashed-shingle
     # table feeds FIVE consumers per action — the truth side's two
     # explodes and two size lookups (via ``d``) plus the candidate
     # side's signature build (passed into minhash_pairs below) — and
@@ -1395,7 +1445,7 @@ def dq_dedup_recall_eval(
         F.lit(None).cast("double").alias("jaccard"),
     ).unionByName(cand.select(F.lit(0).alias("is_truth"), "jaccard"))
     # coalesce the summed counts to 0 and NULL-out the ratios when a
-    # denominator is 0 (ADVICE r11): sum() over an EMPTY union is NULL
+    # denominator is 0: sum() over an EMPTY union is NULL
     # while the oracle's count(*) scalar subqueries are 0, and bare
     # division on a degenerate corpus (no candidates / no truth
     # pairs) would let the two engines' divide-by-zero semantics
@@ -1459,9 +1509,9 @@ def _dedup_eval_sample_den() -> int:
 def dq_dedup_recall_eval_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The SAMPLED dedup-recall eval as a driver-checked entry
-    (VERDICT r14 item 3, completing the r13-item-2 pattern for all
-    three eval harnesses): at 100 TB the shape that ships is the
+    """The SAMPLED dedup-recall eval as a driver-checked entry (the
+    same sampled-entry pattern as the other two eval harnesses): at
+    100 TB the shape that ships is the
     ``eval_sample_den`` one — the md5 probe predicate lands on the
     inverted-shingle join's probe side BEFORE the explode, so the
     Σ df·(df−1)/2 ground-truth term (measured growing 39.9× on 10×
@@ -1537,7 +1587,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (similarity_lsh_bucketed / similarity_ivf_probe) and reserve
         # the exact kernel for buckets. Memoized per (session,
         # embeddings-path stat) including the broadcast handle, so
-        # construction is jobless after first touch (r13; a raise is
+        # construction is jobless after first touch (a raise is
         # NOT memoized — an over-cap fixture re-raises on every
         # construction, which the 120 K smoke's guard check relies
         # on).
@@ -1602,7 +1652,7 @@ def _cosine_block(bc, batches):
 
 #: Hyperplane-sign banding for the LSH dedup path: 64 sign bits split
 #: into 8 bands of 8; candidates agree on ANY band. Production-shaped
-#: geometry (ADVICE r3): wide bands make band agreement SELECTIVE —
+#: geometry: wide bands make band agreement SELECTIVE —
 #: two random vectors share an 8-bit band with p≈(1/2)⁸, any-of-8
 #: ≈3%, vs ~68% under the old 4-bands-of-2 geometry whose 16 buckets
 #: re-created the quadratic pair space at exactly the >100 K scale
@@ -1661,7 +1711,7 @@ def _dedup_band_keys_expr(
     Kept as the semantic spec / cross-check for the vectorized
     ``_band_keys_frame`` below; NOT used in the hot path — expanding
     n_planes×DIM multiply-adds as interpreted HOF expressions costs
-    ~4096 Catalyst-expression evals per row (VERDICT r4/r5)."""
+    ~4096 Catalyst-expression evals per row."""
     planes = _dedup_planes(n_planes)
     keys = []
     for b in range(n_planes // band_bits):
@@ -1700,7 +1750,7 @@ def _band_keys_frame(
     a BLAS-free int64 (batch × DIM) @ (DIM × n_planes) matmul replaces
     ~n_planes·DIM interpreted Catalyst expression evals per row —
     the difference between 29 s and <5 s at sf0.1, and between
-    feasible and not at 100 TB (VERDICT r5 perf headline).
+    feasible and not at 100 TB.
     """
     import numpy as np
     import pandas as pd
@@ -1763,10 +1813,13 @@ def embedding_cosine_lsh_pairs(
 
     # NULL embeddings: posexplode(NULL) used to drop the row; the
     # numpy kernel would crash on None — drop declaratively instead.
-    q = emb.select(
+    # The filter tests ``embedding``, not ``qv`` (NULL exactly when the
+    # embedding is): a filter on ``qv`` is pushed below the projection
+    # as a second ``qvec_of`` per row.
+    q = emb.filter(F.col("embedding").isNotNull()).select(
         "vec_id", qvec_of(F.col("embedding")).alias("qv")
-    ).filter(F.col("qv").isNotNull())
-    # bounded lazy persists (r16, guide §2.4): the band self-join
+    )
+    # bounded lazy persists: the band self-join
     # references ``bands`` twice and the verify stage references
     # ``bkt`` twice (va/vc) — without the persists the numpy band-key
     # kernel and the norm scan each physically ran TWICE per action
@@ -1780,8 +1833,10 @@ def embedding_cosine_lsh_pairs(
             norm(F.col("qv")).alias("nrm"),
         )
     )
+    # the band keys read ``bkt``'s cached ``qv``: each embedding is
+    # quantized once per action, not once per consumer
     bands = persist_bounded(
-        _band_keys_frame(q.select("vec_id", "qv"), n_planes, band_bits)
+        _band_keys_frame(bkt.select("vec_id", "qv"), n_planes, band_bits)
     )
     cand = (
         bands.select(F.col("vec_id").alias("vec_a"), "band", "band_key")
@@ -1885,7 +1940,7 @@ def dedup_embedding_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     |bands|·ids + |candidates|·2 vectors, not |pairs|·2 vectors — and
     with 8-bit bands the candidate set stays ~3% of the pair space
     for unrelated vectors (the 4×2-bit geometry this replaces had 16
-    buckets and emitted ~68% of all pairs; ADVICE r3).
+    buckets and emitted ~68% of all pairs).
 
     Recall is probabilistic and threshold-dependent (≈0.93 at
     production cos ≥ 0.9; low at the fixture's deliberately loose
@@ -1952,7 +2007,8 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
        the shuffle carries hashes and counts, never documents);
     3. MinHash+LSH near-dup pairs over the exact SURVIVORS only
        (minhash_pairs — the expensive stage runs on the already-shrunk
-       set, the standard pipeline ordering);
+       set, the standard pipeline ordering; the signatures and band
+       keys come from one Arrow-batch numpy pass, ``minhash_bands``);
     4. connected components over the near-dup graph
        (label_propagate_components): a graph of at most
        DRIVER_COMPONENTS_MAX_EDGES (2^17, measured as about one
@@ -1968,7 +2024,7 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure over the identically-derived pair set)."""
     docs = read_table(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    # bounded lazy persists (r16, guide §2.4): ``hashed`` is consumed
+    # bounded lazy persists: ``hashed`` is consumed
     # three times (reps, the survivor join, the final decision join)
     # and ``reps`` twice — without the persists the normalize+md5
     # pass over the corpus re-ran once per reference.
@@ -1988,14 +2044,13 @@ def pipeline_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(hashed, reps.exact_rep == hashed.doc_id)
         .select("doc_id", "text")
     )
-    # persist before the symmetrizing union (r16): same two-reference
-    # trap as dedup_cluster_assign — without it the survivor MinHash
-    # pipeline ran twice inside the edge checkpoint.
+    # the pairs go in un-symmetrized: the components kernel takes either
+    # orientation, and without a union the bounded collect compiles
+    # the same code on every call (see driver_components). The persist
+    # keeps the survivor MinHash pipeline to one run when a graph above
+    # the driver bound is read again by the distributed loop.
     pairs = persist_bounded(minhash_pairs(surv).select("doc_a", "doc_b"))
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comp = label_propagate_components(edges).select(
+    comp = label_propagate_components(pairs).select(
         F.col("node").alias("comp_doc"), F.col("label").alias("cluster_id")
     )
     return (
@@ -2083,7 +2138,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute the shingled table ONCE — three consumers below
     # (bucket counts + both sides of the neighbor join) would each
     # recompute the md5 shingling otherwise; bounded lazy persist
-    # keeps construction jobless (r13)
+    # keeps construction jobless
     b = persist_bounded(
         sh.withColumn("bkt", F.shiftright("key", SNM_BUCKET_SHIFT))
     )
@@ -2186,29 +2241,16 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.withColumn("_toks", tokens_of(F.col("text"))).select(
         "doc_id", hashed_shingles(F.col("_toks")).alias("hsh")
     )
-    sig = sh.select(
-        "doc_id", "hsh", minhash_sig_from_hashes(F.col("hsh")).alias("sig")
-    )
-    bands = sig.select(
-        "doc_id",
-        "hsh",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                lambda band: F.element_at("sig", band * LSH_ROWS + 1)
-                * F.lit(MINHASH_P).cast("long")
-                + F.element_at("sig", band * LSH_ROWS + 2),
-            )
-        ).alias("band", "band_key"),
-    )
     is_new = F.col("doc_id") % INCR_NEW_STRIDE == INCR_NEW_RESIDUE
-    newb = bands.filter(is_new).select(
+    # split before the band-key kernel: no filter is pushed through a
+    # MapInArrow, so each side keys only its own documents
+    newb = minhash_bands(sh.filter(is_new)).select(
         F.col("doc_id").alias("new_id"),
         F.col("hsh").alias("sh_a"),
         "band",
         "band_key",
     )
-    corpb = bands.filter(~is_new).select(
+    corpb = minhash_bands(sh.filter(~is_new)).select(
         F.col("doc_id").alias("corpus_id"),
         F.col("hsh").alias("sh_b"),
         "band",
@@ -2454,7 +2496,7 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("blk"),
     )
     a, b = c.alias("a"), c.alias("b")
-    # bounded lazy persist (r16, guide §2.4): the symmetrization below
+    # bounded lazy persist: the symmetrization below
     # references ``hits`` twice — without the persist the blocked
     # self-join AND its levenshtein matcher ran twice per action.
     hits = persist_bounded(

@@ -327,3 +327,89 @@ def test_dot_long_matches_numpy_einsum(spark):
     b = np.array([r[2] for r in rows], dtype=np.int64)
     want = np.einsum("ij,ij->i", a, b)
     assert [got[i] for i in range(len(rows))] == want.tolist()
+
+
+def _naive_band_keys(hashes):
+    """Per-row reference for ``minhash_band_keys``: the SQL semantics of
+    the oracle's signature, one Python int at a time. NULL elements are
+    skipped by the min; a NULL, empty or all-NULL set gives NULL keys."""
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        LSH_BANDS,
+        LSH_ROWS,
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_K,
+        MINHASH_P,
+    )
+
+    def mod(x, p):  # truncating remainder, as in Spark and DuckDB
+        r = abs(x) % p
+        return r if x >= 0 else -r
+
+    vals = [h for h in (hashes or []) if h is not None]
+    if not vals:
+        return None if hashes is None else [None] * LSH_BANDS
+    sig = [
+        min(
+            mod(MINHASH_A[i] * mod(h, MINHASH_P) + MINHASH_B[i], MINHASH_P)
+            for h in vals
+        )
+        for i in range(MINHASH_K)
+    ]
+    return [
+        sig[b * LSH_ROWS] * MINHASH_P + sig[b * LSH_ROWS + 1]
+        for b in range(LSH_BANDS)
+    ]
+
+
+_HASH_LISTS = st.lists(
+    st.one_of(
+        st.none(),
+        st.lists(
+            st.one_of(st.integers(0, 2**60 - 1), st.integers(-(2**60), 2**60)),
+            min_size=0,
+            max_size=12,
+        ),
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(lists=_HASH_LISTS, lo=st.integers(0, 10), hi=st.integers(0, 10))
+def test_minhash_band_keys_matches_naive(lists, lo, hi):
+    """The Arrow-batch MinHash kernel equals the per-row reference on
+    random hash lists: NULL and empty sets (NULL keys for every band),
+    one-row batches, negative hashes (truncating ``%``), and a sliced
+    list array, whose ``values`` ignore the slice."""
+    import pyarrow as pa
+
+    from lake_satellite_image_etl_spark.operators.dedup import (
+        LSH_BANDS,
+        minhash_band_keys,
+    )
+
+    arr = pa.array(lists, type=pa.list_(pa.int64()))
+    sliced = arr.slice(min(lo, len(lists) - 1), hi)
+    for batch, rows in ((arr, lists), (sliced, sliced.to_pylist())):
+        got = minhash_band_keys(batch)
+        assert got.type == pa.list_(pa.int64())
+        assert len(got) == len(rows) and got.null_count == 0
+        for row, keys in zip(rows, got.to_pylist()):
+            want = _naive_band_keys(row)
+            assert keys == (want if want is not None else [None] * LSH_BANDS)
+
+
+def test_minhash_band_keys_null_elements():
+    """A NULL hash inside a set is skipped by the min, and a set of NULL
+    hashes only has NULL keys, as SQL's ``array_min`` / ``list_min``."""
+    import pyarrow as pa
+
+    from lake_satellite_image_etl_spark.operators.dedup import minhash_band_keys
+
+    rows = [[5, None, 7], [None, None], [], None, [3]]
+    got = minhash_band_keys(pa.array(rows, type=pa.list_(pa.int64()))).to_pylist()
+    assert got[0] == _naive_band_keys([5, 7])
+    assert got[1] == got[2] == got[3] == [None] * len(got[0])
+    assert got[4] == _naive_band_keys([3])

@@ -154,7 +154,9 @@ def audit_one(name: str, plan: str) -> dict:
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "pushed": "PushedFilters: [" in plan
         and not re.search(r"PushedFilters: \[\s*\]", plan),
-        "arrow": bool(re.search(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
+        "arrow": bool(
+            re.search(r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", plan)
+        ),
         "py_udf": bool(re.search(r"BatchEvalPython", plan)),
     }
 
@@ -192,8 +194,8 @@ def main() -> int:
         f"Plans compiled against `{SF_DIR}`; shape only, no timing.",
         "`shuf` = shuffle exchanges, `bc` = broadcast exchanges,",
         "`BHJ`/`SMJ` = hash/sort-merge joins, `push` = filters reached the",
-        "scan, `arrow` = Arrow-batched pandas stage (the sanctioned Python",
-        "path). Notes: queries that finish a small near-dup graph's",
+        "scan, `arrow` = Arrow-batched pandas or Arrow stage (the sanctioned",
+        "Python path). Notes: queries that finish a small near-dup graph's",
         "connected components on the driver (dedup_cluster_assign,",
         "dedup_canonical_keep, sample_cluster_safe_split,",
         "pipeline_corpus_dedup, graph_components_star) show the",
